@@ -14,7 +14,10 @@ equivalent is a *job*, not an operator (SURVEY §2.1 #1):
 Layout on disk (any shared filesystem at cluster scale):
 
     <path>/manifest.json          metric, dims, params, per-partition stats
-    <path>/parts/part-NNNNN.pkl   serialized HNSWGraph per partition
+    <path>/parts/part-NNNNN.npz   one HNSWGraph per partition: keys, float32
+                                  vectors, int8 levels and narrow-int
+                                  adjacency arrays (hnsw_graph.py), an
+                                  uncompressed .npz read without pickle
 
 Search merges per-partition top-k exactly (union of partition results →
 global top-k), so recall is ≥ a single monolithic graph with the same
@@ -43,6 +46,7 @@ from duckdb_vss_spark.index.hnsw_graph import (
     DEFAULT_EF_SEARCH,
     DEFAULT_M,
     HNSWGraph,
+    read_shard_keys,
 )
 from duckdb_vss_spark.session import check_persistence_enabled, get_ef_search
 
@@ -53,8 +57,11 @@ __all__ = ["create_hnsw_index", "load_index", "drop_index", "HnswIndex", "index_
 # LRU-bounded: the executor-side knn_join iterates a query partition over
 # EVERY graph file, so an unbounded cache would eventually pin all P
 # graphs in every python worker — the bound keeps per-worker residency at
-# ≤ _GRAPH_CACHE_MAX graphs (≈50 MB each at the 64k-vector ceiling)
-# while still amortizing repeat loads across tasks.
+# ≤ _GRAPH_CACHE_MAX graphs while still amortizing repeat loads across
+# tasks. A graph at the 65,536-vector ceiling holds 21.8 MB of arrays at
+# d=64 (16.8 MB vectors, 4.2 MB uint16 level-0 links, 0.8 MB keys,
+# levels and upper levels; ``approx_memory_bytes`` of a built graph);
+# the vectors dominate at wider d.
 _GRAPH_CACHE: dict[tuple[str, float], HNSWGraph] = {}
 _GRAPH_CACHE_MAX = 32
 # driver-probe candidate lists above this size fetch via a broadcast
@@ -70,10 +77,10 @@ _MIN_BATCH_SHARD_ROWS = 2_048
 
 
 def _shard_stats(params: dict, parts_dir: str, pid: int, keys, vecs) -> dict:
-    """Build ONE graph shard file and return its manifest partition row
-    (levels_stats JSON-encoded for the mapInPandas schema). Shared by
-    add_batch's local and distributed builders and merge_small_shards
-    (r16 — one builder, not three copies)."""
+    """Build ONE graph shard file and return its manifest partition row.
+    The single shard writer: create_hnsw_index, add_batch and
+    merge_small_shards all build through ``_build_parts_local`` or
+    ``_build_parts_distributed``, which call this."""
     if vecs.shape[1] != params["dims"]:
         raise ValueError(
             f"HNSW index keys must be of type FLOAT[{params['dims']}]"
@@ -82,17 +89,44 @@ def _shard_stats(params: dict, parts_dir: str, pid: int, keys, vecs) -> dict:
         params["dims"], params["metric"], params["m"], params["m0"],
         params["ef_construction"], seed=42 + pid,
     ).build(keys, vecs)
-    file = os.path.join(parts_dir, f"part-{pid:05d}.pkl")
+    file = os.path.join(parts_dir, f"part-{pid:05d}.npz")
     with open(file, "wb") as f:
-        f.write(g.to_bytes())
+        g.save(f)
     return {
         "pid": pid,
         "file": file,
         "count": len(keys),
         "max_level": g.max_level,
         "memory": g.approx_memory_bytes(),
-        "levels_stats": json.dumps(g.level_stats()),
+        "levels_stats": g.level_stats(),
     }
+
+
+def _build_parts_local(
+    rows: list, params: dict, parts_dir: str, num_partitions: int, pid_base: int = 0
+) -> list[dict]:
+    """Driver-side shard build over collected (id, vec) rows,
+    round-robin over ``num_partitions`` shards with the same seeds as
+    the distributed build (shard membership differs from the
+    distributed hash split — membership is not part of the index
+    contract, every split is a valid HNSW layout)."""
+    import numpy as np
+
+    if not rows:
+        return []
+    total = len(rows)
+    keys_all = np.fromiter((r[0] for r in rows), dtype=np.int64, count=total)
+    vecs_all = np.stack([np.asarray(r[1], dtype=np.float32) for r in rows])
+    out = []
+    for i in range(num_partitions):
+        sel = np.arange(i, total, num_partitions)
+        if sel.size:
+            out.append(
+                _shard_stats(
+                    params, parts_dir, pid_base + i, keys_all[sel], vecs_all[sel]
+                )
+            )
+    return out
 
 
 def _build_parts_distributed(
@@ -129,6 +163,8 @@ def _build_parts_distributed(
             params, parts_dir, pid,
             np.concatenate(keys_acc), np.concatenate(vec_acc),
         )
+        # JSON across the mapInPandas schema, decoded once below
+        row["levels_stats"] = json.dumps(row["levels_stats"])
         yield pd.DataFrame({k: [v] for k, v in row.items()})
 
     stats = src.repartition(num_partitions).mapInPandas(
@@ -216,8 +252,7 @@ def _load_graph(path: str) -> HNSWGraph:
     if g is None:
         for k in [k for k in _GRAPH_CACHE if k[0] == path]:
             del _GRAPH_CACHE[k]
-        with open(path, "rb") as f:
-            g = HNSWGraph.from_bytes(f.read())
+        g = HNSWGraph.load(path)
         while len(_GRAPH_CACHE) >= _GRAPH_CACHE_MAX:
             _GRAPH_CACHE.pop(next(iter(_GRAPH_CACHE)))
         _GRAPH_CACHE[key] = g
@@ -327,6 +362,15 @@ class HnswIndex:
     """Handle over a built index artifact."""
 
     def __init__(self, spark: SparkSession, path: str, manifest: dict):
+        stale = [
+            p["file"] for p in manifest.get("partitions", []) if p["file"].endswith(".pkl")
+        ]
+        if stale:
+            raise ValueError(
+                f"index at {path!r} lists pickled graph shards ({stale[0]!r}), a "
+                "format this version no longer reads: rebuild the index with "
+                "create_hnsw_index(..., overwrite=True)"
+            )
         self.spark = spark
         self.path = path
         self.manifest = manifest
@@ -880,9 +924,6 @@ class HnswIndex:
         data): batch shards build partition-parallel with the same
         64k-vector ceiling as the bulk build, and search cost stays
         O(right-sized shards) instead of O(epochs)."""
-        import numpy as np
-        import pandas as pd
-
         man = self.manifest
         id_col, vec_col = man["id_col"], man["vec_col"]
         params = dict(
@@ -938,27 +979,9 @@ class HnswIndex:
             local_rows = None
 
         if local_rows is not None:
-            stats = []
-            if total:
-                keys_all = np.fromiter(
-                    (r[0] for r in local_rows), dtype=np.int64, count=total
-                )
-                vecs_all = np.stack(
-                    [np.asarray(r[1], dtype=np.float32) for r in local_rows]
-                )
-                for i in range(num_partitions):
-                    sel = np.arange(i, total, num_partitions)
-                    if sel.size:
-                        stats.append(
-                            _shard_stats(
-                                params, parts_dir, pid_base + i,
-                                keys_all[sel], vecs_all[sel],
-                            )
-                        )
-            new_parts = [
-                {**r, "levels_stats": json.loads(r["levels_stats"])}
-                for r in sorted(stats, key=lambda r: r["pid"])
-            ]
+            new_parts = _build_parts_local(
+                local_rows, params, parts_dir, num_partitions, pid_base
+            )
         else:
             new_parts = _build_parts_distributed(
                 src, id_col, vec_col, params, parts_dir, num_partitions, pid_base
@@ -1056,8 +1079,11 @@ class HnswIndex:
         return self
 
     def keys_df(self) -> DataFrame:
-        """The indexed ids, reconstructed from the shards (executor-side
-        like ``vectors_df`` but keys only — skinny rows)."""
+        """The indexed ids, read from the shards (executor-side like
+        ``vectors_df``). Each task reads only the shard files' ``keys``
+        member — no vectors, no adjacency, and no entry in the graph
+        LRU, so delete_batch's membership check never evicts search
+        graphs."""
         import pandas as pd
 
         id_col = self.manifest["id_col"]
@@ -1065,7 +1091,7 @@ class HnswIndex:
         def load_keys(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 for file in pdf["file"]:
-                    yield pd.DataFrame({id_col: _load_graph(file).keys})
+                    yield pd.DataFrame({id_col: read_shard_keys(file)})
 
         return self._parts_df().mapInPandas(load_keys, schema=f"{id_col} long")
 
@@ -1081,9 +1107,9 @@ class HnswIndex:
         candidates, ``count``/``info()`` report live rows, and
         ``compact()``/``compact_from_shards()`` physically drop them.
         Cost: the tombstone write is O(|ids| + |tombstones|), plus one
-        keys-only pass over the (worker-LRU-cached) shard graphs for
-        the membership check — the same cost class as a single query;
-        no shard is rewritten here.
+        pass over the shard files' ``keys`` members for the membership
+        check (``keys_df``); no graph is loaded and no shard is
+        rewritten here.
 
         ``ids``: a DataFrame carrying the index's id column (extra
         columns ignored) or a plain iterable of ints. Ids absent from
@@ -1265,8 +1291,8 @@ class HnswIndex:
             try:
                 os.remove(p["file"])
             except OSError:
-                pass  # best-effort: an orphaned pkl is dead weight, not
-                # a correctness hazard (the manifest no longer lists it)
+                pass  # best-effort: an orphaned shard is dead weight,
+                # not a correctness hazard (the manifest no longer lists it)
         return self
 
     def compact_from_shards(
@@ -1356,9 +1382,6 @@ def create_hnsw_index(
     work (measured r10; DuckDB's CREATE INDEX is in-process always).
     Unknown-size sources (non-file, remote FS) and anything larger take
     the distributed path."""
-    import numpy as np
-    import pandas as pd
-
     m0 = m0 if m0 is not None else 2 * m
     _validate_options(metric, ef_construction, ef_search, m, m0)
     check_persistence_enabled(spark)
@@ -1424,77 +1447,16 @@ def create_hnsw_index(
             total, int(spark.conf.get("spark.sql.shuffle.partitions"))
         )
     params = dict(metric=metric, m=m, m0=m0, ef_construction=ef_construction, dims=dims)
-
-    def _graph_stats(pid: int, keys: "np.ndarray", vecs: "np.ndarray") -> dict:
-        """Build one partition's graph (same params/seed on either
-        path) and persist it; returns its manifest stats row."""
-        if vecs.shape[1] != params["dims"]:
-            raise ValueError(f"HNSW index keys must be of type FLOAT[{params['dims']}]")
-        g = HNSWGraph(
-            params["dims"],
-            params["metric"],
-            params["m"],
-            params["m0"],
-            params["ef_construction"],
-            seed=42 + pid,
-        ).build(keys, vecs)
-        file = os.path.join(parts_dir, f"part-{pid:05d}.pkl")
-        with open(file, "wb") as f:
-            f.write(g.to_bytes())
-        return {
-            "pid": pid,
-            "file": file,
-            "count": len(keys),
-            "max_level": g.max_level,
-            "memory": g.approx_memory_bytes(),
-            "levels_stats": json.dumps(g.level_stats()),
-        }
-
     if local_rows is not None:
-        # in-process build: round-robin the collected rows over the
-        # same partition count (graph membership differs from the
-        # distributed hash split — membership is not part of the index
-        # contract, every split is a valid HNSW layout)
-        stats = []
-        if total:
-            keys_all = np.fromiter(
-                (r[0] for r in local_rows), dtype=np.int64, count=total
-            )
-            vecs_all = np.stack(
-                [np.asarray(r[1], dtype=np.float32) for r in local_rows]
-            )
-            for pid in range(num_partitions):
-                sel = np.arange(pid, total, num_partitions)
-                if sel.size:
-                    stats.append(_graph_stats(pid, keys_all[sel], vecs_all[sel]))
-        return _commit_manifest(
-            spark, path, name, vec_col, id_col, metric, dims,
-            m, m0, ef_construction, ef_search, num_partitions, stats,
+        # in-process build: the same partition count and graph seeds
+        parts = _build_parts_local(local_rows, params, parts_dir, num_partitions)
+    else:
+        parts = _build_parts_distributed(
+            src, id_col, vec_col, params, parts_dir, num_partitions, 0
         )
-
-    src = src.repartition(num_partitions)
-
-    def build_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        keys_acc, vec_acc = [], []
-        for pdf in batches:
-            if len(pdf):
-                keys_acc.append(pdf[id_col].to_numpy(dtype=np.int64))
-                vec_acc.append(np.stack([np.asarray(v, dtype=np.float32) for v in pdf[vec_col]]))
-        if not keys_acc:
-            return
-        row = _graph_stats(pid, np.concatenate(keys_acc), np.concatenate(vec_acc))
-        yield pd.DataFrame({k: [v] for k, v in row.items()})
-
-    stats = src.mapInPandas(
-        build_part,
-        schema="pid int, file string, count long, max_level int, memory long, levels_stats string",
-    ).collect()
     return _commit_manifest(
         spark, path, name, vec_col, id_col, metric, dims,
-        m, m0, ef_construction, ef_search, num_partitions, stats,
+        m, m0, ef_construction, ef_search, num_partitions, parts,
     )
 
 
@@ -1511,11 +1473,11 @@ def _commit_manifest(
     ef_construction: int,
     ef_search: int,
     num_partitions: int,
-    stats,
+    parts: list[dict],
 ) -> HnswIndex:
-    """Assemble and ATOMICALLY commit the manifest from per-partition
-    stats rows (dicts from the driver-local build or Rows from the
-    distributed collect); the index "exists" once the file appears."""
+    """Assemble and ATOMICALLY commit the manifest from the shard
+    builders' partition rows; the index "exists" once the file
+    appears."""
     manifest = {
         "index_name": name,
         "table_name": "",
@@ -1525,21 +1487,11 @@ def _commit_manifest(
         "dimensions": dims,
         "params": dict(m=m, m0=m0, ef_construction=ef_construction, ef_search=ef_search),
         "num_partitions": num_partitions,
-        "count": int(sum(r["count"] for r in stats)),
-        "capacity": int(sum(r["count"] for r in stats)),
-        "approx_memory_usage": int(sum(r["memory"] for r in stats)),
+        "count": int(sum(r["count"] for r in parts)),
+        "capacity": int(sum(r["count"] for r in parts)),
+        "approx_memory_usage": int(sum(r["memory"] for r in parts)),
         "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        "partitions": [
-            {
-                "pid": r["pid"],
-                "file": r["file"],
-                "count": r["count"],
-                "max_level": r["max_level"],
-                "memory": r["memory"],
-                "levels_stats": json.loads(r["levels_stats"]),
-            }
-            for r in sorted(stats, key=lambda r: r["pid"])
-        ],
+        "partitions": sorted(parts, key=lambda r: r["pid"]),
     }
     write_manifest(path, manifest, indent=1)
     return HnswIndex(spark, path, manifest)

@@ -30,13 +30,26 @@ This graph is deliberately partition-local: one graph per Spark
 partition, built independently inside ``mapInPandas`` — share-nothing,
 no locks (the reference needs an rwlock resize protocol for its shared
 graph, hnsw_index.cpp:408-448; we avoid shared mutation entirely).
+
+Layout. Adjacency is one fixed-width array per level: ``links[l]`` is
+(nodes on level l, m_max(l)) of neighbor node indices in traversal
+order, ``degree[l]`` how many leading slots of each row are used. The
+rows of level l are the nodes with ``levels >= l`` in ascending node
+order (level 0: every node, row = node). Node indices use the narrowest
+unsigned dtype that holds ``n - 1`` — uint16 for every shard up to the
+65,536-row build ceiling — and ``levels`` is int8. Build, search, the
+incremental insert and the shard file all use these arrays; a shard
+file is an uncompressed ``.npz`` of them (plus keys, vectors and a
+small ``meta`` vector), read with ``allow_pickle=False``, so loading
+never unpickles and ``keys`` can be read alone (``read_shard_keys``).
+At d=64 a level-0 row costs 2·m0 + 1 = 65 B next to 256 B of vector.
 """
 
 from __future__ import annotations
 
 import heapq
 import io
-import pickle
+import zipfile
 
 import numpy as np
 
@@ -45,6 +58,50 @@ DEFAULT_EF_CONSTRUCTION = 128
 DEFAULT_EF_SEARCH = 64
 
 _METRICS = ("l2sq", "cosine", "ip")
+
+# shard file layout version, stored as meta[0]
+_FORMAT = 1
+_META = ("format", "dim", "m", "m0", "ef_construction", "seed", "entry", "max_level")
+# what a truncated or foreign shard file raises on the way through np.load
+_READ_ERRORS = (OSError, ValueError, KeyError, EOFError, zipfile.BadZipFile)
+
+
+def _index_dtype(n: int) -> np.dtype:
+    """Narrowest unsigned dtype that holds node indices ``0..n-1``."""
+    return np.min_scalar_type(max(int(n) - 1, 0))
+
+
+def _level_members(levels: np.ndarray) -> list[np.ndarray]:
+    """Per level l, the nodes with ``levels >= l`` in ascending order."""
+    top = int(levels.max()) if len(levels) else -1
+    return [np.flatnonzero(levels >= l) for l in range(top + 1)]
+
+
+def _open_npz(source) -> "np.lib.npyio.NpzFile":
+    z = np.load(source, allow_pickle=False)
+    if not isinstance(z, np.lib.npyio.NpzFile):
+        raise ValueError("not an .npz archive")
+    return z
+
+
+def _read_shard(path: str, read):
+    """``read(npz)`` on the shard file at ``path``; a truncated or
+    foreign file raises a ValueError that names it."""
+    try:
+        with _open_npz(path) as z:
+            return read(z)
+    except FileNotFoundError:
+        raise
+    except _READ_ERRORS as e:
+        raise ValueError(
+            f"{path}: not a readable HNSW shard ({type(e).__name__}: {e})"
+        ) from e
+
+
+def read_shard_keys(path: str) -> np.ndarray:
+    """The int64 row keys of a shard file, without reading its vectors
+    or adjacency."""
+    return _read_shard(path, lambda z: z["keys"])
 
 
 def _rank_dist(metric: str, q: np.ndarray, xs: np.ndarray) -> np.ndarray:
@@ -84,11 +141,38 @@ class HNSWGraph:
         self._inv_log_m = 1.0 / np.log(self.m)
         self.vectors = np.empty((0, dim), dtype=np.float32)
         self.keys = np.empty(0, dtype=np.int64)
-        self.levels: list[int] = []
-        # neighbors[node][level] -> list[int] of node indices
-        self.neighbors: list[list[list[int]]] = []
+        self.levels = np.empty(0, dtype=np.int8)
+        # per level l: links[l][row, :degree[l][row]] are the neighbor
+        # node indices of node _members[l][row] (see module docstring)
+        self.links: list[np.ndarray] = []
+        self.degree: list[np.ndarray] = []
+        self._members: list[np.ndarray] = []
         self.entry = -1
         self.max_level = -1
+
+    def _alloc_levels(self) -> None:
+        """Empty adjacency arrays for the current ``levels``."""
+        idx = _index_dtype(len(self.levels))
+        self._members = _level_members(self.levels)
+        self.links, self.degree = [], []
+        for l, mem in enumerate(self._members):
+            m_max = self.m0 if l == 0 else self.m
+            self.links.append(np.zeros((len(mem), m_max), dtype=idx))
+            self.degree.append(np.zeros(len(mem), dtype=np.min_scalar_type(m_max)))
+
+    def _row(self, node: int, lvl: int) -> int:
+        return node if lvl == 0 else int(self._members[lvl].searchsorted(node))
+
+    def neighbors(self, node: int, lvl: int) -> np.ndarray:
+        """Neighbor node indices of ``node`` on level ``lvl``, in
+        traversal order (``node`` must be on that level)."""
+        r = self._row(node, lvl)
+        return self.links[lvl][r, : self.degree[lvl][r]]
+
+    def _set_neighbors(self, node: int, lvl: int, nbrs: list) -> None:
+        r = self._row(node, lvl)
+        self.links[lvl][r, : len(nbrs)] = nbrs
+        self.degree[lvl][r] = len(nbrs)
 
     # -- construction -----------------------------------------------------
 
@@ -113,11 +197,8 @@ class HNSWGraph:
         rng = np.random.default_rng(self.seed)
         self.vectors = vectors
         self.keys = keys
-        new_levels = np.floor(-np.log(rng.random(n)) * self._inv_log_m).astype(int)
-        self.levels = new_levels.tolist()
-        self.neighbors = [
-            [[] for _ in range(lvl + 1)] for lvl in self.levels
-        ]
+        self.levels = np.floor(-np.log(rng.random(n)) * self._inv_log_m).astype(np.int8)
+        self._alloc_levels()
         if n > 1 and self.BULK_BLOCK > 0:
             self._bulk_build()
         else:
@@ -139,15 +220,13 @@ class HNSWGraph:
         layout are identical to the incremental path. Cost is O(n²·d)
         BLAS flops per level — bounded per partition by the artifact
         builder's partition ceiling (artifact.py)."""
-        levels_arr = np.asarray(self.levels)
-        self.max_level = int(levels_arr.max())
-        self.entry = int(levels_arr.argmax())
+        self.max_level = int(self.levels.max())
+        self.entry = int(self.levels.argmax())
         for lvl in range(self.max_level + 1):
-            members = np.flatnonzero(levels_arr >= lvl)
-            if len(members) < 2:
+            if len(self._members[lvl]) < 2:
                 continue
             m_max = self.m0 if lvl == 0 else self.m
-            self._build_level(members, lvl, m_max)
+            self._build_level(lvl, m_max)
 
     # -- vectorized level builder ----------------------------------------
 
@@ -371,7 +450,7 @@ class HNSWGraph:
     # sub-batch cap for gathered candidate tensors (rows × L × dim floats)
     _GATHER_BUDGET = 48_000_000
 
-    def _build_level(self, members: np.ndarray, lvl: int, m_max: int) -> None:
+    def _build_level(self, lvl: int, m_max: int) -> None:
         """One level: exact forward candidates (blocked, BLAS) → diversity
         select → one vectorized reverse-edge transpose → one batched
         overflow prune per node. Forward candidates come from exact top-c
@@ -379,6 +458,7 @@ class HNSWGraph:
         edges and pruning can run once per level instead of per inserted
         node (the incremental path's per-edge pruning collapses to a
         single grouped pass)."""
+        members = self._members[lvl]
         n = len(members)
         V = np.ascontiguousarray(self.vectors[members], dtype=np.float32)
         W, w_sq = self._prep(V)
@@ -435,39 +515,31 @@ class HNSWGraph:
         comp = np.unique(e_src[ns] * np.int64(n) + e_dst[ns])
         u_src, u_dst = comp // n, comp % n
         deg = np.bincount(u_src, minlength=n)
-        bounds = np.r_[0, np.cumsum(deg)]
-        adj: list[np.ndarray] = [None] * n
-        over_ids: list[int] = []
-        over_nbrs: list[np.ndarray] = []
-        for j in range(n):
-            nb = u_dst[bounds[j] : bounds[j + 1]]
-            if len(nb) <= m_max:
-                adj[j] = nb
-            else:
-                over_ids.append(j)
-                over_nbrs.append(nb)
-        if over_ids:
-            self._prune_nodes(W, w_sq, adj, over_ids, over_nbrs, m_max)
-        for j in range(n):
-            nb = adj[j]
-            self.neighbors[int(members[j])][lvl] = (
-                [] if nb is None else members[nb].tolist()
-            )
+        rank = np.arange(len(u_src)) - np.r_[0, np.cumsum(deg)][u_src]
+        # rows within m_max keep their id-sorted slice; the overflowing
+        # rows (contiguous in u_src order) go through the batched prune
+        fits = deg[u_src] <= m_max
+        adj = np.zeros((n, m_max), dtype=np.int64)  # level-local indices
+        adj[u_src[fits], rank[fits]] = u_dst[fits]
+        over = np.flatnonzero(deg > m_max)
+        if len(over):
+            self._prune_nodes(W, w_sq, adj, deg, over, u_dst[~fits], m_max)
+        used = np.arange(m_max)[None, :] < deg[:, None]
+        self.links[lvl][:] = np.where(used, members[adj], 0)
+        self.degree[lvl][:] = deg
 
-    def _prune_nodes(self, W, w_sq, adj, node_ids, nbr_lists, m_max):
-        """Diversity-prune overflowing neighborhoods in batches: one
-        gathered matmul for node→neighbor distances, one for the
+    def _prune_nodes(self, W, w_sq, adj, deg, node_ids, flat, m_max):
+        """Diversity-prune overflowing neighborhoods in batches, writing
+        the kept neighbors into ``adj``/``deg`` rows of ``node_ids``:
+        one gathered matmul for node→neighbor distances, one for the
         neighbor-pair matrix, then the vectorized occlusion select.
-        The ragged neighbor lists pad to (A, L) in one flat gather
-        (rows pad with their own first neighbor, masked out by
-        ``counts``) — no per-node Python on the prune path."""
-        L = max(len(x) for x in nbr_lists)
+        ``flat`` holds the nodes' neighbor lists back to back; the
+        ragged lists pad to (A, L) in one flat gather (rows pad with
+        their own first neighbor, masked out by ``counts``) — no
+        per-node Python on the prune path."""
+        cnts_all = deg[node_ids].astype(np.int64)
+        L = int(cnts_all.max())
         sub = max(1, self._GATHER_BUDGET // max(L * self.dim, 1))
-        node_ids = np.asarray(node_ids, dtype=np.int64)
-        cnts_all = np.fromiter(
-            (len(x) for x in nbr_lists), dtype=np.int64, count=len(nbr_lists)
-        )
-        flat = np.concatenate(nbr_lists)
         starts_all = np.r_[np.int64(0), np.cumsum(cnts_all)][:-1]
         pos = np.arange(L)[None, :]
         for a0 in range(0, len(node_ids), sub):
@@ -493,11 +565,13 @@ class HNSWGraph:
             P = self._batch_gram(W, w_sq, idx_s)
             sel, keep_n = self._batch_select(dq_s, P, m_max, counts)
             picked = np.take_along_axis(idx_s, sel, axis=1)
-            for a in range(a1 - a0):
-                adj[ids_b[a]] = picked[a, : keep_n[a]]
+            adj[ids_b, : picked.shape[1]] = picked
+            deg[ids_b] = keep_n
 
     def _dist_to(self, q: np.ndarray, idxs) -> np.ndarray:
-        return _rank_dist(self.metric, q, self.vectors[idxs])
+        # take, not fancy indexing: the same rows, at half the cost for
+        # a narrow-int neighbor row
+        return _rank_dist(self.metric, q, self.vectors.take(idxs, axis=0))
 
     def _pairwise_rank(self, V: np.ndarray) -> np.ndarray:
         """All-pairs rank distance among rows of V in one BLAS call."""
@@ -550,7 +624,7 @@ class HNSWGraph:
         return [cands[p] for p in order]
 
     def _insert(self, i: int) -> None:
-        level = self.levels[i]
+        level = int(self.levels[i])
         if self.entry < 0:
             self.entry = i
             self.max_level = level
@@ -566,10 +640,9 @@ class HNSWGraph:
             cands = self._search_layer(q, [(ep_d, ep)], self.ef_construction, lvl)
             m_max = self.m0 if lvl == 0 else self.m
             chosen = self._select_neighbors(cands, m_max)
-            self.neighbors[i][lvl] = [idx for _, idx in chosen]
+            self._set_neighbors(i, lvl, [idx for _, idx in chosen])
             for d_c, c in chosen:
-                nb = self.neighbors[c][lvl]
-                nb.append(i)
+                nb = self.neighbors(c, lvl).tolist() + [i]
                 if len(nb) > m_max:
                     # prune c's overflowing neighborhood with the same
                     # diversity heuristic (ordered by distance to c)
@@ -578,7 +651,8 @@ class HNSWGraph:
                     sel = self._select_neighbors(
                         [(float(ds[j]), nb[j]) for j in order], m_max
                     )
-                    self.neighbors[c][lvl] = [idx for _, idx in sel]
+                    nb = [idx for _, idx in sel]
+                self._set_neighbors(c, lvl, nb)
             if cands:
                 ep_d, ep = cands[0]
         if level > self.max_level:
@@ -587,38 +661,42 @@ class HNSWGraph:
 
     def _greedy(self, q, ep, ep_d, lvl):
         while True:
-            nbrs = self.neighbors[ep][lvl] if lvl < len(self.neighbors[ep]) else []
-            if not nbrs:
+            nbrs = self.neighbors(ep, lvl)
+            if not len(nbrs):
                 return ep, ep_d
             ds = self._dist_to(q, nbrs)
             j = int(np.argmin(ds))
             if ds[j] < ep_d:
-                ep, ep_d = nbrs[j], float(ds[j])
+                ep, ep_d = int(nbrs[j]), float(ds[j])
             else:
                 return ep, ep_d
 
     def _search_layer(self, q, entries, ef, lvl):
         """Best-first search; returns [(dist, idx)] sorted ascending, ≤ef."""
-        visited = {idx for _, idx in entries}
+        visited = np.zeros(len(self.keys), dtype=bool)
+        for _, idx in entries:
+            visited[idx] = True
         cand = [(d, i) for d, i in entries]  # min-heap of frontier
         heapq.heapify(cand)
         best = [(-d, i) for d, i in entries]  # max-heap of ef best
         heapq.heapify(best)
+        links, degree = self.links[lvl], self.degree[lvl]
+        rows = self._members[lvl] if lvl else None
         while cand:
             d, c = heapq.heappop(cand)
             if d > -best[0][0] and len(best) >= ef:
                 break
-            nbrs = [
-                x
-                for x in (self.neighbors[c][lvl] if lvl < len(self.neighbors[c]) else [])
-                if x not in visited
-            ]
-            if not nbrs:
+            r = c if rows is None else int(rows.searchsorted(c))
+            # one widening copy per row: every index op below then runs
+            # on intp without a per-op cast (measured ~15% per search)
+            nbrs = links[r, : degree[r]].astype(np.intp)
+            nbrs = nbrs[~visited[nbrs]]
+            if not len(nbrs):
                 continue
-            visited.update(nbrs)
+            visited[nbrs] = True
             ds = self._dist_to(q, nbrs)
             bound = -best[0][0]
-            for dx, x in zip(ds.tolist(), nbrs):
+            for dx, x in zip(ds.tolist(), nbrs.tolist()):
                 if len(best) < ef or dx < bound:
                     heapq.heappush(cand, (dx, x))
                     heapq.heappush(best, (-dx, x))
@@ -662,10 +740,8 @@ class HNSWGraph:
         24-58)."""
         stats = []
         for lvl in range(self.max_level + 1):
-            nodes = sum(1 for l in self.levels if l >= lvl)
-            edges = sum(
-                len(nb[lvl]) for nb in self.neighbors if lvl < len(nb)
-            )
+            nodes = len(self._members[lvl])
+            edges = int(self.degree[lvl].sum(dtype=np.int64))
             m_max = self.m0 if lvl == 0 else self.m
             stats.append(
                 {
@@ -678,49 +754,70 @@ class HNSWGraph:
         return stats
 
     def approx_memory_bytes(self) -> int:
+        """Bytes held by the graph's arrays (vectors, keys, levels,
+        adjacency)."""
         return int(
             self.vectors.nbytes
             + self.keys.nbytes
-            + sum(len(nb[l]) * 8 for nb in self.neighbors for l in range(len(nb)))
+            + self.levels.nbytes
+            + sum(a.nbytes for a in self.links + self.degree)
         )
+
+    def save(self, file) -> None:
+        """Write the graph as an uncompressed ``.npz`` to a path or a
+        binary file object."""
+        meta = dict(
+            format=_FORMAT, dim=self.dim, m=self.m, m0=self.m0,
+            ef_construction=self.ef_construction, seed=self.seed,
+            entry=self.entry, max_level=self.max_level,
+        )
+        arrays = {
+            "meta": np.array([meta[k] for k in _META], dtype=np.int64),
+            "metric": np.array(self.metric),
+            "keys": self.keys,
+            "vectors": self.vectors,
+            "levels": self.levels,
+        }
+        for lvl, (links, degree) in enumerate(zip(self.links, self.degree)):
+            arrays[f"links{lvl}"] = links
+            arrays[f"degree{lvl}"] = degree
+        np.savez(file, **arrays)
 
     def to_bytes(self) -> bytes:
         buf = io.BytesIO()
-        pickle.dump(
-            {
-                "dim": self.dim,
-                "metric": self.metric,
-                "m": self.m,
-                "m0": self.m0,
-                "ef_construction": self.ef_construction,
-                "seed": self.seed,
-                "vectors": self.vectors,
-                "keys": self.keys,
-                "levels": self.levels,
-                "neighbors": self.neighbors,
-                "entry": self.entry,
-                "max_level": self.max_level,
-            },
-            buf,
-            protocol=4,
-        )
+        self.save(buf)
         return buf.getvalue()
 
     @classmethod
-    def from_bytes(cls, data: bytes) -> "HNSWGraph":
-        d = pickle.loads(data)
+    def _from_npz(cls, z) -> "HNSWGraph":
+        meta = dict(zip(_META, z["meta"].tolist()))
+        if meta["format"] != _FORMAT:
+            raise ValueError(f"unsupported shard format {meta['format']}")
         g = cls(
-            d["dim"],
-            d["metric"],
-            d["m"],
-            d["m0"],
-            d["ef_construction"],
-            d["seed"],
+            meta["dim"],
+            str(z["metric"]),
+            meta["m"],
+            meta["m0"],
+            meta["ef_construction"],
+            meta["seed"],
         )
-        g.vectors = d["vectors"]
-        g.keys = d["keys"]
-        g.levels = d["levels"]
-        g.neighbors = d["neighbors"]
-        g.entry = d["entry"]
-        g.max_level = d["max_level"]
+        g.vectors = z["vectors"]
+        g.keys = z["keys"]
+        g.levels = z["levels"]
+        g._members = _level_members(g.levels)
+        g.links = [z[f"links{l}"] for l in range(len(g._members))]
+        g.degree = [z[f"degree{l}"] for l in range(len(g._members))]
+        g.entry = meta["entry"]
+        g.max_level = meta["max_level"]
         return g
+
+    @classmethod
+    def from_bytes(cls, data: bytes) -> "HNSWGraph":
+        with _open_npz(io.BytesIO(data)) as z:
+            return cls._from_npz(z)
+
+    @classmethod
+    def load(cls, path: str) -> "HNSWGraph":
+        """Read a shard file written by ``save``; a truncated or foreign
+        file raises a ValueError that names it."""
+        return _read_shard(path, cls._from_npz)

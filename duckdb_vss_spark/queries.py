@@ -1322,8 +1322,9 @@ import os as _os
 # (v4: manifests record source_files for the auto-rerank default;
 #  v5: source_files require a validated source_fingerprint — a v4
 #  manifest predating the fingerprint schema would silently degrade the
-#  auto-rerank default to ADC-only recall, VERDICT r12 #1)
-_ARTIFACT_VERSION = "v5"
+#  auto-rerank default to ADC-only recall, VERDICT r12 #1;
+#  v6: HNSW shards are .npz arrays — a pickled-shard artifact is refused)
+_ARTIFACT_VERSION = "v6"
 
 
 def _get_index(spark: SparkSession, sf_dir: str):

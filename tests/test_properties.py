@@ -96,9 +96,10 @@ def test_graph_roundtrip_preserves_search(xs):
     g = HNSWGraph(xs.shape[1], "l2sq", m=4, ef_construction=32).build(keys, xs)
     g2 = HNSWGraph.from_bytes(g.to_bytes())
     q = xs[-1]
-    a, _ = g.search(q, 3, ef_search=64)
-    b, _ = g2.search(q, 3, ef_search=64)
+    a, da = g.search(q, 3, ef_search=64)
+    b, db = g2.search(q, 3, ef_search=64)
     assert np.array_equal(a, b)
+    assert np.array_equal(da, db)
 
 
 def test_incremental_path_matches_bulk_quality():
@@ -114,13 +115,14 @@ def test_incremental_path_matches_bulk_quality():
 
     g = Inc(8, "l2sq", m=8, ef_construction=64).build(keys, xs)
     q = xs[17]
-    got, _ = g.search(q, 10, ef_search=600)
+    got, dist = g.search(q, 10, ef_search=600)
     want = np.argsort(((xs.astype(np.float64) - q) ** 2).sum(axis=1), kind="stable")[:10]
     assert set(got.tolist()) == set(want.tolist())
     # round-trip preserved on the incremental layout too
     g2 = HNSWGraph.from_bytes(g.to_bytes())
-    got2, _ = g2.search(q, 10, ef_search=600)
+    got2, d2 = g2.search(q, 10, ef_search=600)
     assert np.array_equal(got, got2)
+    assert np.array_equal(dist, d2)
 
 
 def test_duplicate_saturated_corpus_stays_navigable():
