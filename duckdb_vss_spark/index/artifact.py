@@ -40,6 +40,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from duckdb_vss_spark.functions.distance import distance_for_metric
+from duckdb_vss_spark.index.driver import (
+    _MAX_ISIN_CANDIDATES,
+    FileLRU,
+    driver_probe_budget,
+)
 from duckdb_vss_spark.index.manifest import write_manifest
 from duckdb_vss_spark.index.hnsw_graph import (
     DEFAULT_EF_CONSTRUCTION,
@@ -51,23 +56,6 @@ from duckdb_vss_spark.index.hnsw_graph import (
 from duckdb_vss_spark.session import check_persistence_enabled, get_ef_search
 
 __all__ = ["create_hnsw_index", "load_index", "drop_index", "HnswIndex", "index_info"]
-
-# executor-process graph cache (file path + mtime → HNSWGraph); in local
-# mode this is one process, on a cluster one per executor python worker.
-# LRU-bounded: the executor-side knn_join iterates a query partition over
-# EVERY graph file, so an unbounded cache would eventually pin all P
-# graphs in every python worker — the bound keeps per-worker residency at
-# ≤ _GRAPH_CACHE_MAX graphs while still amortizing repeat loads across
-# tasks. A graph at the 65,536-vector ceiling holds 21.8 MB of arrays at
-# d=64 (16.8 MB vectors, 4.2 MB uint16 level-0 links, 0.8 MB keys,
-# levels and upper levels; ``approx_memory_bytes`` of a built graph);
-# the vectors dominate at wider d.
-_GRAPH_CACHE: dict[tuple[str, float], HNSWGraph] = {}
-_GRAPH_CACHE_MAX = 32
-# driver-probe candidate lists above this size fetch via a broadcast
-# join instead of a literal In-filter (planning + pushdown of a
-# many-thousand-literal predicate costs more than the join it saves)
-_MAX_ISIN_CANDIDATES = 512
 
 # add_batch parallelism floor (r15, VERDICT r14 #4): never split a
 # batch into shards smaller than this many rows — below it, the Spark
@@ -246,21 +234,21 @@ def _plan_small_merge(
     return small, n_new
 
 
+# executor-process graph cache (file path + mtime → HNSWGraph); in local
+# mode this is one process, on a cluster one per executor python worker.
+# LRU-bounded: the executor-side knn_join iterates a query partition over
+# EVERY graph file, so an unbounded cache would eventually pin all P
+# graphs in every python worker — the bound keeps per-worker residency at
+# ≤ 32 graphs while still amortizing repeat loads across tasks. A graph
+# at the 65,536-vector ceiling holds 21.8 MB of arrays at d=64 (16.8 MB
+# vectors, 4.2 MB uint16 level-0 links, 0.8 MB keys, levels and upper
+# levels; ``approx_memory_bytes`` of a built graph); the vectors
+# dominate at wider d.
+_GRAPH_CACHE = FileLRU(32)
+
+
 def _load_graph(path: str) -> HNSWGraph:
-    key = (path, os.path.getmtime(path))
-    g = _GRAPH_CACHE.get(key)
-    if g is None:
-        for k in [k for k in _GRAPH_CACHE if k[0] == path]:
-            del _GRAPH_CACHE[k]
-        g = HNSWGraph.load(path)
-        while len(_GRAPH_CACHE) >= _GRAPH_CACHE_MAX:
-            _GRAPH_CACHE.pop(next(iter(_GRAPH_CACHE)))
-        _GRAPH_CACHE[key] = g
-    else:
-        # move-to-end = LRU recency (dicts preserve insertion order)
-        del _GRAPH_CACHE[key]
-        _GRAPH_CACHE[key] = g
-    return g
+    return _GRAPH_CACHE.get(path, HNSWGraph.load)
 
 
 def _search_query_stream(
@@ -427,14 +415,7 @@ class HnswIndex:
         repeated queries pay file reads once."""
         import numpy as np
 
-        try:
-            budget = int(
-                self.spark.conf.get(
-                    "spark.vss.driver_probe_max_bytes", str(256 << 20)
-                )
-            )
-        except Exception:  # noqa: BLE001 — conf surface moved
-            budget = 256 << 20
+        budget = driver_probe_budget(self.spark)
         est = int(self.manifest.get("count", 0)) * int(self.dims) * 4 * 4
         if budget <= 0 or est <= 0 or est > budget:
             return None

@@ -43,6 +43,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from duckdb_vss_spark.index.driver import FileLRU, _shortlist_frame, driver_topk
 from duckdb_vss_spark.index.manifest import write_manifest
 from duckdb_vss_spark.functions.distance import distance_for_metric
 
@@ -656,27 +657,12 @@ class BqIndex:
                 else q
             )
             nshort = max(take, int(k)) if take > 0 else int(k)
-            # r16 second session (guide §1): gate-small asym artifacts
-            # resolve the shortlist ON the driver by replaying the SQL
-            # expression tree's exact fold order (bit-identity pinned
-            # by tests/test_quantized_driver_search); oversized keep
-            # the distributed scan below (the 100 TB path)
+            # gate-small artifacts resolve the shortlist on the driver
+            # (index/driver.py); None keeps the distributed scan below
             pairs = _driver_asym_shortlist(self, q, xs, nshort)
             if pairs is not None:
-                import pandas as _pd
-
-                short = self.spark.createDataFrame(
-                    _pd.DataFrame(
-                        {
-                            id_col: np.asarray(
-                                [i for i, _s in pairs], dtype=np.int64
-                            ),
-                            "hamming": np.asarray(
-                                [s for _i, s in pairs], dtype=np.float64
-                            ),
-                        }
-                    ),
-                    schema=f"{id_col} long, hamming double",
+                short = _shortlist_frame(
+                    self.spark, pairs, id_col, "hamming", "double"
                 )
             else:
                 dot = _signed_dot_packed("sig", xs, self.dims)
@@ -692,27 +678,11 @@ class BqIndex:
                 )
         else:
             nshort = max(take, int(k)) if take > 0 else int(k)
-            # r16 (guide §1): gate-small plain-hamming artifacts resolve
-            # the shortlist ON the driver — integer scores, so identity
-            # with the JVM column is exact; oversized artifacts keep the
-            # distributed scan below (the 100 TB path)
+            # gate-small artifacts resolve the shortlist on the driver
+            # (index/driver.py); None keeps the distributed scan below
             pairs = _driver_hamming_shortlist(self, q, nshort)
             if pairs is not None:
-                import pandas as _pd
-
-                short = self.spark.createDataFrame(
-                    _pd.DataFrame(
-                        {
-                            id_col: np.asarray(
-                                [i for i, _h in pairs], dtype=np.int64
-                            ),
-                            "hamming": np.asarray(
-                                [h for _i, h in pairs], dtype=np.int32
-                            ),
-                        }
-                    ),
-                    schema=f"{id_col} long, hamming int",
-                )
+                short = _shortlist_frame(self.spark, pairs, id_col, "hamming", "int")
             else:
                 qsig = [
                     sum(
@@ -951,74 +921,47 @@ class BqIndex:
         return self
 
 
-# worker-LRU cache of decoded signature files for the multi-query
-# stream (the BQ twin of pq._CODES_CACHE): (ids asc, ±1 sign matrix,
-# centered norms, full norms)
-def _driver_hamming_shortlist(index, q, take: int):
-    """(id, hamming) top-``take`` computed ON the driver for
-    gate-small PLAIN-hamming artifacts (r16 — the BQ face of
-    pq._driver_adc_shortlist; guide §1), or None when the artifact is
-    too big / unreadable / asym-scored / the shortlist too wide —
-    those keep the distributed scan bit-for-bit. Hamming scores are
-    INTEGERS, so identity with the JVM ``hamming_distance`` column is
-    exact arithmetic (no float-association risk), and ties break on
-    (hamming, id) exactly like the cluster ORDER BY; the asym
-    estimator stays on its SQL float path (replaying that expression
-    tree's association order is the risk the plain path avoids).
-    Pinned by tests/test_quantized_driver_search."""
-    from duckdb_vss_spark.index import tombstones as _tomb
-    from duckdb_vss_spark.index.pq import (
-        _MAX_DRIVER_SHORTLIST,
-        _driver_probe_budget,
-        _list_parquet_files,
-    )
+def _driver_sigs_topk(index, take: int, asym: bool, score):
+    """The BQ shortlist on the driver (driver.driver_topk) over every
+    signature file; the decoded ±1 sign matrix dominates driver memory,
+    one byte per dimension."""
+    from duckdb_vss_spark.index.pq import _list_parquet_files
 
     man = index.manifest
-    if man.get("scoring", "hamming") == "asym":
-        return None
     dims = int(man["dimensions"])
-    budget = _driver_probe_budget(index.spark)
-    # decoded ±1 sign matrix dominates driver memory: one byte per dim
-    est = int(man.get("count", 0)) * (dims + 16) * 2
-    if budget <= 0 or est <= 0 or est > budget:
+    return driver_topk(
+        index,
+        int(man.get("count", 0)) * (dims + 16) * 2,
+        take,
+        lambda: _list_parquet_files(os.path.join(index.path, "sigs")),
+        lambda f: _load_sigs(f, man["id_col"], dims, asym),
+        score,
+    )
+
+
+def _driver_hamming_shortlist(index, q, take: int):
+    """(id, hamming) top-``take`` for PLAIN-hamming artifacts on the
+    driver (None for asym-scored ones). Hamming scores are INTEGERS, so
+    identity with the JVM ``hamming_distance`` column is exact
+    arithmetic with no float-association risk."""
+    if index.manifest.get("scoring", "hamming") == "asym":
         return None
-    if int(take) > _MAX_DRIVER_SHORTLIST:
-        return None
-    dead = _tomb.dead_mask_payload_local(index)
-    if dead is _tomb.UNREADABLE:
-        return None
-    id_col = man["id_col"]
     # the same sign convention the query packing uses: bit set iff > 0
     qsigns = np.where(np.asarray(q, dtype=np.float64) > 0, 1, -1).astype(np.int8)
-    try:
-        files = _list_parquet_files(os.path.join(index.path, "sigs"))
-        parts = []
-        for file in files:
-            ids, signs, _vn, _vf = _load_sigs(file, id_col, dims, False)
-            d = _tomb.applicable_dead(dead, file)
-            if d is not None:
-                keep = ~np.isin(ids, d)
-                ids, signs = ids[keep], signs[keep]
-            if len(ids):
-                parts.append(
-                    (ids, (signs != qsigns[None, :]).sum(axis=1, dtype=np.int64))
-                )
-    except Exception:  # noqa: BLE001 — remote FS/corrupt: distributed path
-        return None
-    if not parts:
-        return []
-    ids = np.concatenate([p[0] for p in parts])
-    h = np.concatenate([p[1] for p in parts])
-    order = np.lexsort((ids, h))[: int(take)]
-    return [(int(ids[i]), int(h[i])) for i in order]
+    return _driver_sigs_topk(
+        index,
+        take,
+        False,
+        lambda _f, signs, _vn, _vf: (signs != qsigns[None, :]).sum(
+            axis=1, dtype=np.int64
+        ),
+    )
 
 
 def _driver_asym_shortlist(index, q, xs, take: int):
-    """(id, score) asym top-``take`` computed ON the driver for
-    gate-small asym-scored artifacts (r16, second session), or None
-    when the artifact is too big / unreadable / the shortlist too
-    wide. Unlike the hamming path this replays FLOAT arithmetic, so it
-    follows the `_write_sigs_local` discipline: every operation
+    """(id, score) asym top-``take`` for asym-scored artifacts on the
+    driver. Unlike the hamming path this replays FLOAT arithmetic, so
+    it follows the `_write_sigs_local` discipline: every operation
     reproduces the generated SQL expression tree's exact shape —
 
     - the signed dot is the SQL's left-associated 64-term ``+`` fold of
@@ -1029,91 +972,50 @@ def _driver_asym_shortlist(index, q, xs, take: int):
     - the score composes in the Column tree's association order
       ((vnc*vnc) - ((beta*vnc)*dot) for l2sq, -(vnc*dot) for ip,
       (-(cq + (vnc*dot)/r))/vfull for cosine) with the same
-      driver-computed constants.
-
-    Bit-identity pinned per metric by tests/test_quantized_driver_search."""
-    from duckdb_vss_spark.index import tombstones as _tomb
-    from duckdb_vss_spark.index.pq import (
-        _MAX_DRIVER_SHORTLIST,
-        _driver_probe_budget,
-        _list_parquet_files,
-    )
-
+      driver-computed constants."""
     man = index.manifest
     dims = int(man["dimensions"])
-    budget = _driver_probe_budget(index.spark)
-    est = int(man.get("count", 0)) * (dims + 16) * 2
-    if budget <= 0 or est <= 0 or est > budget:
-        return None
-    if int(take) > _MAX_DRIVER_SHORTLIST:
-        return None
-    dead = _tomb.dead_mask_payload_local(index)
-    if dead is _tomb.UNREADABLE:
-        return None
-    id_col = man["id_col"]
     metric = man["metric"]
     rho = float(man["asym_rho"])
     beta = 2.0 / (rho * float(np.sqrt(dims)))
     xs = [float(x) for x in xs]
-    try:
-        files = _list_parquet_files(os.path.join(index.path, "sigs"))
-        parts = []
-        for file in files:
-            ids, signs, vn, vf = _load_sigs(file, id_col, dims, True)
-            d = _tomb.applicable_dead(dead, file)
-            if d is not None:
-                keep = ~np.isin(ids, d)
-                ids, signs = ids[keep], signs[keep]
-                vn = vn[keep]
-                vf = vf[keep] if vf is not None else None
-            if not len(ids):
-                continue
-            bits = signs > 0
-            # the SQL fold: t0 + t1 + ... left-associated, each term an
-            # exact ±xs[b] literal — start FROM t0 (no 0.0 seed)
-            dot = np.where(bits[:, 0], xs[0], -xs[0])
-            for b in range(1, dims):
-                dot = dot + np.where(bits[:, b], xs[b], -xs[b])
-            if metric == "l2sq":
-                sc = vn * vn - (beta * vn) * dot
-            elif metric == "ip":
-                sc = -(vn * dot)
-            else:  # cosine — same constant expressions as asym_score
-                cq = float(
-                    np.dot(
-                        np.asarray(man["asym_center"], dtype=np.float64),
-                        np.asarray([float(x) for x in q], dtype=np.float64),
-                    )
-                )
-                r = rho * float(np.sqrt(dims))
-                sc = (-(cq + (vn * dot) / r)) / vf
-            parts.append((ids, sc))
-    except Exception:  # noqa: BLE001 — remote FS/corrupt: distributed path
-        return None
-    if not parts:
-        return []
-    ids = np.concatenate([p[0] for p in parts])
-    sc = np.concatenate([p[1] for p in parts])
-    order = np.lexsort((ids, sc))[: int(take)]
-    return [(int(ids[i]), float(sc[i])) for i in order]
+
+    def score(_file, signs, vn, vf):
+        bits = signs > 0
+        # the SQL fold: t0 + t1 + ... left-associated, each term an
+        # exact ±xs[b] literal — start FROM t0 (no 0.0 seed)
+        dot = np.where(bits[:, 0], xs[0], -xs[0])
+        for b in range(1, dims):
+            dot = dot + np.where(bits[:, b], xs[b], -xs[b])
+        if metric == "l2sq":
+            return vn * vn - (beta * vn) * dot
+        if metric == "ip":
+            return -(vn * dot)
+        # cosine — same constant expressions as asym_score
+        cq = float(
+            np.dot(
+                np.asarray(man["asym_center"], dtype=np.float64),
+                np.asarray([float(x) for x in q], dtype=np.float64),
+            )
+        )
+        r = rho * float(np.sqrt(dims))
+        return (-(cq + (vn * dot) / r)) / vf
+
+    return _driver_sigs_topk(index, take, True, score)
 
 
-_SIGS_CACHE: dict = {}
-_SIGS_CACHE_MAX = 8
+# worker-LRU cache of decoded signature files for the multi-query
+# stream and the driver shortlists (the BQ twin of pq._CODES_CACHE):
+# (ids asc, ±1 sign matrix, centered norms, full norms)
+_SIGS_CACHE = FileLRU(8)
 
 
 def _load_sigs(file: str, id_col: str, dims: int, asym: bool):
-    import os as _os
-
-    key = (file, _os.path.getmtime(file))
-    hit = _SIGS_CACHE.get(key)
-    if hit is None:
+    def read(path):
         import pyarrow.parquet as papq
 
-        for k in [k for k in _SIGS_CACHE if k[0] == file]:
-            del _SIGS_CACHE[k]
         cols = [id_col, "sig"] + (["vnc", "vfull"] if asym else [])
-        t = papq.read_table(file, columns=cols)
+        t = papq.read_table(path, columns=cols)
         ids = np.asarray(t[id_col].to_pylist(), dtype=np.int64)
         words = np.asarray(t["sig"].to_pylist(), dtype=np.int64)
         n = len(ids)
@@ -1124,19 +1026,14 @@ def _load_sigs(file: str, id_col: str, dims: int, asym: bool):
         vn = np.asarray(t["vnc"].to_pylist(), dtype=np.float64) if asym else None
         vf = np.asarray(t["vfull"].to_pylist(), dtype=np.float64) if asym else None
         order = np.argsort(ids, kind="stable")
-        hit = (
+        return (
             ids[order],
             signs[order],
             vn[order] if vn is not None else None,
             vf[order] if vf is not None else None,
         )
-        while len(_SIGS_CACHE) >= _SIGS_CACHE_MAX:
-            _SIGS_CACHE.pop(next(iter(_SIGS_CACHE)))
-        _SIGS_CACHE[key] = hit
-    else:
-        del _SIGS_CACHE[key]
-        _SIGS_CACHE[key] = hit
-    return hit
+
+    return _SIGS_CACHE.get(file, read)
 
 
 def _bq_query_stream(

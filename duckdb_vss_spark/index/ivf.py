@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType
 
+from duckdb_vss_spark.index.driver import _MAX_ISIN_CANDIDATES, FileLRU, driver_topk
 from duckdb_vss_spark.index.manifest import write_manifest
 from duckdb_vss_spark.functions.distance import distance_for_metric
 
@@ -307,8 +308,6 @@ class IvfIndex:
         # artifacts keep the full probed scan (the 100 TB path).
         pairs = _driver_ivf_shortlist(self, q, probes, int(k))
         if pairs is not None:
-            from duckdb_vss_spark.index.artifact import _MAX_ISIN_CANDIDATES
-
             uniq = sorted({int(i) for i, _d in pairs})
             if len(uniq) <= _MAX_ISIN_CANDIDATES:
                 base = base.where(F.col(id_col).isin(uniq))
@@ -565,46 +564,44 @@ class IvfIndex:
 
 
 # mtime-keyed LRU of decoded list files for repeated single-query
-# searches on gate-small artifacts (the IVF face of bq._SIGS_CACHE)
-_VECS_CACHE: dict = {}
-_VECS_CACHE_MAX = 32
+# searches on gate-small artifacts
+_VECS_CACHE = FileLRU(32)
+
+
+def _read_fixed_width(path: str, id_col: str, list_col: str, dims: int):
+    """(ids, flat element values) of one inverted-list data file whose
+    every ``list_col`` row holds exactly ``dims`` non-NULL elements, or
+    None for any other shape — NULL rows or elements and ragged rows
+    keep Spark's NULL/size-mismatch semantics on the distributed
+    scan."""
+    import pyarrow.parquet as papq
+
+    t = papq.read_table(path, columns=[id_col, list_col])
+    ids = np.asarray(t[id_col].to_pylist(), dtype=np.int64)
+    col = t[list_col].combine_chunks()
+    if col.null_count:
+        return None
+    flat = col.flatten()
+    if flat.null_count or len(flat) != len(ids) * dims:
+        return None
+    if len(ids) and not bool((np.diff(np.asarray(col.offsets)) == dims).all()):
+        return None  # uniform total length but ragged rows
+    return ids, flat.to_numpy(zero_copy_only=False)
 
 
 def _load_vecs(file: str, id_col: str, vec_col: str, dims: int):
     """(ids, float64 (n, dims) matrix) for one inverted-list data file,
-    or None when the stored shape cannot take the driver fold — NULL
-    elements, ragged rows, or a non-float element type keep Spark's
-    NULL/size-mismatch semantics on the distributed scan."""
-    key = (file, os.path.getmtime(file))
-    hit = _VECS_CACHE.get(key)
-    if hit is None:
-        import pyarrow.parquet as papq
+    or None when the stored shape cannot take the driver fold (see
+    ``_read_fixed_width``) or the elements are not floats."""
 
-        for k in [k for k in _VECS_CACHE if k[0] == file]:
-            del _VECS_CACHE[k]
-        t = papq.read_table(file, columns=[id_col, vec_col])
-        ids = np.asarray(t[id_col].to_pylist(), dtype=np.int64)
-        col = t[vec_col].combine_chunks()
-        if col.null_count:
+    def read(path):
+        got = _read_fixed_width(path, id_col, vec_col, dims)
+        if got is None or got[1].dtype.kind != "f":
             return None
-        flat = col.flatten()
-        if flat.null_count or len(flat) != len(ids) * dims:
-            return None
-        vals = flat.to_numpy(zero_copy_only=False)
-        if vals.dtype.kind != "f":
-            return None
-        off = np.asarray(col.offsets)
-        if len(ids) and not bool((np.diff(off) == dims).all()):
-            return None  # uniform total length but ragged rows
-        xv = vals.astype(np.float64, copy=False).reshape(len(ids), dims)
-        hit = (ids, xv)
-        while len(_VECS_CACHE) >= _VECS_CACHE_MAX:
-            _VECS_CACHE.pop(next(iter(_VECS_CACHE)))
-        _VECS_CACHE[key] = hit
-    else:
-        del _VECS_CACHE[key]
-        _VECS_CACHE[key] = hit
-    return hit
+        ids, vals = got
+        return ids, vals.astype(np.float64, copy=False).reshape(len(ids), dims)
+
+    return _VECS_CACHE.get(file, read)
 
 
 def _replay_distance(metric: str, xv: np.ndarray, q: np.ndarray) -> np.ndarray:
@@ -647,65 +644,37 @@ def _replay_distance(metric: str, xv: np.ndarray, q: np.ndarray) -> np.ndarray:
     return 1.0 - sim
 
 
-def _driver_ivf_shortlist(index, q, probes, take: int):
-    """(id, dist) top-``take`` over the PROBED lists computed ON the
-    driver for gate-small artifacts (r16 — the IVF face of
-    pq._driver_adc_shortlist; guide §1: the probed scan costs ~300 ms
-    of scheduling against ~1 ms of actual arithmetic at gate size), or
-    None when the artifact is too big for driver state / unreadable /
-    the shortlist too wide — those keep the distributed scan (the
-    100 TB path). Scores replay the JVM expression tree bit-for-bit
-    (``_replay_distance``); ties break on (dist, id) exactly like the
-    cluster ORDER BY."""
-    from duckdb_vss_spark.index import tombstones as _tomb
-    from duckdb_vss_spark.index.pq import (
-        _MAX_DRIVER_SHORTLIST,
-        _driver_probe_budget,
-        _list_parquet_files,
-    )
+def _probed_files(path: str, probes) -> list[str]:
+    """Data files of the probed lists under the hive
+    ``lists/list_id=N/`` layout (partitionBy writes no dir for an empty
+    list)."""
+    from duckdb_vss_spark.index.pq import _list_parquet_files
 
+    out: list[str] = []
+    for p in probes:
+        d = os.path.join(path, "lists", f"list_id={int(p)}")
+        if os.path.isdir(d):
+            out.extend(_list_parquet_files(d))
+    return out
+
+
+def _driver_ivf_shortlist(index, q, probes, take: int):
+    """Exact top-``take`` over the PROBED lists, on the driver
+    (driver.driver_topk), scored by ``_replay_distance``. The gate
+    counts the float64 row matrix of the WHOLE artifact, not the probed
+    fraction, so whether the route fires does not depend on the probes
+    (like every other family)."""
     man = index.manifest
     dims = int(man["dimensions"])
-    budget = _driver_probe_budget(index.spark)
-    # float64 row matrix dominates driver memory; gate on the WHOLE
-    # artifact (not the probed fraction) so the fired/not decision is
-    # probe-independent like every other family's
-    est = int(man.get("count", 0)) * dims * 8 * 2
-    if budget <= 0 or est <= 0 or est > budget:
-        return None
-    if int(take) > _MAX_DRIVER_SHORTLIST:
-        return None
-    dead = _tomb.dead_mask_payload_local(index)
-    if dead is _tomb.UNREADABLE:
-        return None
-    id_col = man["id_col"]
-    vec_col = man["vec_col"]
     qv = np.asarray([float(x) for x in q], dtype=np.float64)
-    try:
-        parts = []
-        for p in probes:
-            d = os.path.join(index.path, "lists", f"list_id={int(p)}")
-            if not os.path.isdir(d):
-                continue  # empty list: partitionBy wrote no dir
-            for file in _list_parquet_files(d):
-                loaded = _load_vecs(file, id_col, vec_col, dims)
-                if loaded is None:
-                    return None  # shapes only the JVM fold can score
-                ids, xv = loaded
-                dd = _tomb.applicable_dead(dead, file)
-                if dd is not None:
-                    keep = ~np.isin(ids, dd)
-                    ids, xv = ids[keep], xv[keep]
-                if len(ids):
-                    parts.append((ids, _replay_distance(index.metric, xv, qv)))
-    except Exception:  # noqa: BLE001 — remote FS/corrupt: distributed path
-        return None
-    if not parts:
-        return []
-    ids = np.concatenate([p[0] for p in parts])
-    dist = np.concatenate([p[1] for p in parts])
-    order = np.lexsort((ids, dist))[: int(take)]
-    return [(int(ids[i]), float(dist[i])) for i in order]
+    return driver_topk(
+        index,
+        int(man.get("count", 0)) * dims * 8 * 2,
+        take,
+        lambda: _probed_files(index.path, probes),
+        lambda f: _load_vecs(f, man["id_col"], man["vec_col"], dims),
+        lambda _f, xv: _replay_distance(index.metric, xv, qv),
+    )
 
 
 def _write_lists_local(

@@ -51,10 +51,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from duckdb_vss_spark.index.driver import _shortlist_frame, driver_topk
 from duckdb_vss_spark.index.manifest import write_manifest
 from duckdb_vss_spark.functions.distance import distance_for_metric
 from duckdb_vss_spark.index.ivf import _calibrate_nprobe, _count_and_dims, _kmeans, _norm_rows
 from duckdb_vss_spark.index.pq import (
+    _adc_scores,
     _buffered_query_stream,
     _encode_batch,
     _fetch_candidates,
@@ -62,7 +64,6 @@ from duckdb_vss_spark.index.pq import (
     _load_codes,
     _merge_topk,
     _resolve_rerank,
-    _shortlist_frame,
     _source_manifest_fields,
     train_pq_codebooks,
 )
@@ -201,62 +202,30 @@ def _codes_files_by_list(codes_dir: str) -> dict[int, list[str]]:
 
 
 def _driver_ivfadc_shortlist(index, luts, pos, probes, take: int):
-    """(id, dist) residual-ADC top-``take`` over the probed lists,
-    computed ON the driver (r16 — the IVFADC face of
-    pq._driver_adc_shortlist; guide §1), or None when the artifact is
-    too big / unreadable / the shortlist too wide — those keep the
-    distributed scan bit-for-bit. Genuine list pruning is preserved:
-    only the probed lists' hive dirs are read. Bit-identity is by
-    construction: the same ``_load_codes`` LRU, the same ``mask_dead``
-    epoch resolution, and the same gather+``sum(axis=1)`` expression
-    the pandas UDF runs (pidx is constant per hive file — every row in
-    a ``list_id=N`` file has list_id N); pinned by
-    tests/test_quantized_driver_search."""
-    from duckdb_vss_spark.index import tombstones as _tomb
-    from duckdb_vss_spark.index.pq import (
-        _MAX_DRIVER_SHORTLIST,
-        _driver_probe_budget,
-    )
-
+    """Residual-ADC top-``take`` over the PROBED lists, on the driver
+    (driver.driver_topk): list pruning is kept, only the probed lists'
+    hive dirs are read. Every row of a ``list_id=N`` file has list_id
+    N, so the file's LUT is the one the pandas UDF's ``luts[pidx]``
+    gather picks for each of its rows."""
     man = index.manifest
     m = int(man["m"])
-    budget = _driver_probe_budget(index.spark)
-    est = int(man.get("count", 0)) * (m + 8) * 2
-    if budget <= 0 or est <= 0 or est > budget:
-        return None
-    if int(take) > _MAX_DRIVER_SHORTLIST:
-        return None
-    dead = _tomb.dead_mask_payload_local(index)
-    if dead is _tomb.UNREADABLE:
-        return None
-    id_col = man["id_col"]
-    try:
-        files_by_list = _codes_files_by_list(os.path.join(index.path, "codes"))
-        parts = []
+    lut_of: dict[str, np.ndarray] = {}
+
+    def files():
+        by_list = _codes_files_by_list(os.path.join(index.path, "codes"))
         for lid in probes:
-            for file in files_by_list.get(int(lid), ()):
-                ids, codes = _load_codes(file, id_col, m)
-                if dead is not None:
-                    ids, codes = _tomb.mask_dead(ids, codes, dead, file)
-                # the same scalars the UDF's luts[pidx] gather extracts,
-                # without materializing the (n, m, ksub) intermediate —
-                # the gathered (n, m) array is element-identical, so the
-                # per-row sum(axis=1) bits are too; slabbed to bound
-                # peak memory (per-row bits are slab-independent)
-                for lo in range(0, len(ids), 65_536):
-                    arr = codes[lo : lo + 65_536]
-                    if not len(arr):
-                        continue
-                    d = luts[pos[int(lid)], np.arange(m), arr].sum(axis=1)
-                    parts.append((ids[lo : lo + 65_536], d))
-    except Exception:  # noqa: BLE001 — remote FS/corrupt: distributed path
-        return None
-    if not parts:
-        return []
-    ids = np.concatenate([p[0] for p in parts])
-    d = np.concatenate([p[1] for p in parts])
-    order = np.lexsort((ids, d))[: int(take)]
-    return [(int(ids[i]), float(d[i])) for i in order]
+            for f in by_list.get(int(lid), ()):
+                lut_of[f] = luts[pos[int(lid)]]
+                yield f
+
+    return driver_topk(
+        index,
+        int(man.get("count", 0)) * (m + 8) * 2,
+        take,
+        files,
+        lambda f: _load_codes(f, man["id_col"], m),
+        lambda f, codes: _adc_scores(lut_of[f], codes),
+    )
 
 
 class IvfPqIndex:
@@ -350,14 +319,11 @@ class IvfPqIndex:
 
         id_col = self.manifest["id_col"]
         take = int(rerank) if rerank else int(k)
-        # r16 (guide §1): gate-small artifacts resolve the residual-ADC
-        # shortlist ON the driver with the exact cluster kernels
-        # (bit-identity pinned by tests/test_quantized_driver_search) —
-        # the candidate scan stage disappears while list pruning is
-        # preserved; oversized artifacts keep the distributed scan
+        # gate-small artifacts resolve the shortlist on the driver
+        # (index/driver.py); None keeps the distributed scan below
         pairs = _driver_ivfadc_shortlist(self, luts, pos, probes, take)
         if pairs is not None:
-            cand = _shortlist_frame(self.spark, pairs, id_col, dist_col)
+            cand = _shortlist_frame(self.spark, pairs, id_col, dist_col, "double")
         else:
 
             def adc(list_ids, codes):

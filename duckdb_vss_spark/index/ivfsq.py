@@ -38,6 +38,14 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_vss_spark.index.driver import (
+    _MAX_ISIN_CANDIDATES,
+    FileLRU,
+    _shortlist_frame,
+    driver_topk,
+)
+from duckdb_vss_spark.index.ivf import _probed_files, _read_fixed_width
+
 __all__ = ["IvfSqIndex", "create_ivfsq_index", "load_ivfsq_index", "drop_ivfsq_index"]
 
 _LOG = logging.getLogger(__name__)
@@ -117,16 +125,13 @@ class IvfSqIndex:
         )
         dist_fn = distance_for_metric(self.manifest["metric"])
         nshort = int(rerank or k)
-        # r16 (guide §1): gate-small artifacts resolve the SQ-ADC
-        # shortlist ON the driver (bit-identical replay of the
-        # reconstruction+distance tree) — the candidate stage becomes
-        # an order-preserving LocalTableScan; oversized artifacts keep
-        # the distributed scan (the 100 TB path)
+        # gate-small artifacts resolve the shortlist on the driver
+        # (index/driver.py); None keeps the distributed scan below
         pairs = _driver_sq_shortlist(self, q, probes, nshort)
         if pairs is not None:
-            from duckdb_vss_spark.index.pq import _shortlist_frame
-
-            shortlist = _shortlist_frame(self.spark, pairs, id_col, dist_col)
+            shortlist = _shortlist_frame(
+                self.spark, pairs, id_col, dist_col, "double"
+            )
         else:
             recon = sq_reconstruct(F.col("codes"), self._mins, self._maxs)
             shortlist = (
@@ -140,8 +145,6 @@ class IvfSqIndex:
             return shortlist.select(id_col, dist_col).limit(int(k))
         vec_col = self.manifest["vec_col"]
         if pairs is not None:
-            from duckdb_vss_spark.index.artifact import _MAX_ISIN_CANDIDATES
-
             uniq = sorted({int(i) for i, _d in pairs})
             if len(uniq) <= _MAX_ISIN_CANDIDATES:
                 # the semi-join is id-set semantics, so a literal
@@ -361,47 +364,23 @@ class IvfSqIndex:
 
 
 # mtime-keyed LRU of decoded SQ code files for repeated single-query
-# searches on gate-small artifacts (the IVF×SQ face of bq._SIGS_CACHE)
-_SQ_CODES_CACHE: dict = {}
-_SQ_CODES_CACHE_MAX = 32
+# searches on gate-small artifacts
+_SQ_CODES_CACHE = FileLRU(32)
 
 
 def _load_sq_codes(file: str, id_col: str, dims: int):
     """(ids, uint8 (n, dims) code matrix) for one inverted-list data
-    file, or None when the stored shape cannot take the driver fold —
-    NULL elements or ragged rows keep Spark's NULL/size-mismatch
-    semantics on the distributed scan."""
-    key = (file, os.path.getmtime(file))
-    hit = _SQ_CODES_CACHE.get(key)
-    if hit is None:
-        import pyarrow.parquet as papq
+    file, or None when the stored shape cannot take the driver fold
+    (see ivf._read_fixed_width)."""
 
-        for k in [k for k in _SQ_CODES_CACHE if k[0] == file]:
-            del _SQ_CODES_CACHE[k]
-        t = papq.read_table(file, columns=[id_col, "codes"])
-        ids = np.asarray(t[id_col].to_pylist(), dtype=np.int64)
-        col = t["codes"].combine_chunks()
-        if col.null_count:
+    def read(path):
+        got = _read_fixed_width(path, id_col, "codes", dims)
+        if got is None:
             return None
-        flat = col.flatten()
-        if flat.null_count or len(flat) != len(ids) * dims:
-            return None
-        off = np.asarray(col.offsets)
-        if len(ids) and not bool((np.diff(off) == dims).all()):
-            return None  # uniform total length but ragged rows
-        codes = (
-            flat.to_numpy(zero_copy_only=False)
-            .astype(np.uint8)
-            .reshape(len(ids), dims)
-        )
-        hit = (ids, codes)
-        while len(_SQ_CODES_CACHE) >= _SQ_CODES_CACHE_MAX:
-            _SQ_CODES_CACHE.pop(next(iter(_SQ_CODES_CACHE)))
-        _SQ_CODES_CACHE[key] = hit
-    else:
-        del _SQ_CODES_CACHE[key]
-        _SQ_CODES_CACHE[key] = hit
-    return hit
+        ids, vals = got
+        return ids, vals.astype(np.uint8).reshape(len(ids), dims)
+
+    return _SQ_CODES_CACHE.get(file, read)
 
 
 def _replay_sq_distance(
@@ -437,70 +416,26 @@ def _replay_sq_distance(
 
 
 def _driver_sq_shortlist(index, q, probes, take: int):
-    """(id, dist) SQ-ADC top-``take`` over the PROBED lists computed ON
-    the driver for gate-small artifacts (r16 — the IVF×SQ face of
-    pq._driver_adc_shortlist), or None when the artifact is too big for
-    driver state / unreadable / the shortlist too wide — those keep the
-    distributed scan (the 100 TB path). Scores replay the generated
-    reconstruction+distance tree bit-for-bit (``_replay_sq_distance``);
-    ties break on (dist, id) exactly like the cluster ORDER BY."""
-    from duckdb_vss_spark.index import tombstones as _tomb
-    from duckdb_vss_spark.index.pq import (
-        _MAX_DRIVER_SHORTLIST,
-        _driver_probe_budget,
-        _list_parquet_files,
-    )
-
+    """SQ-ADC top-``take`` over the PROBED lists, on the driver
+    (driver.driver_topk), scored by ``_replay_sq_distance``. The
+    per-dimension float64 reconstruction temporaries dominate; the gate
+    counts the WHOLE artifact so whether the route fires does not
+    depend on the probes."""
     man = index.manifest
     if man["metric"] != "l2sq":  # the replay covers v1's only metric
         return None
     dims = int(man["dimensions"])
-    budget = _driver_probe_budget(index.spark)
-    # the per-dim f64 reconstruction temporaries dominate; gate on the
-    # WHOLE artifact so the fired/not decision is probe-independent
-    est = int(man.get("count", 0)) * dims * 8 * 2
-    if budget <= 0 or est <= 0 or est > budget:
-        return None
-    if int(take) > _MAX_DRIVER_SHORTLIST:
-        return None
-    dead = _tomb.dead_mask_payload_local(index)
-    if dead is _tomb.UNREADABLE:
-        return None
-    id_col = man["id_col"]
     qv = np.asarray([float(x) for x in q], dtype=np.float64)
-    try:
-        parts = []
-        for p in probes:
-            d = os.path.join(index.path, "lists", f"list_id={int(p)}")
-            if not os.path.isdir(d):
-                continue  # empty list: partitionBy wrote no dir
-            for file in _list_parquet_files(d):
-                loaded = _load_sq_codes(file, id_col, dims)
-                if loaded is None:
-                    return None  # shapes only the JVM fold can score
-                ids, codes = loaded
-                dd = _tomb.applicable_dead(dead, file)
-                if dd is not None:
-                    keep = ~np.isin(ids, dd)
-                    ids, codes = ids[keep], codes[keep]
-                if len(ids):
-                    parts.append(
-                        (
-                            ids,
-                            _replay_sq_distance(
-                                man["metric"], codes, index._mins,
-                                index._maxs, qv,
-                            ),
-                        )
-                    )
-    except Exception:  # noqa: BLE001 — remote FS/corrupt: distributed path
-        return None
-    if not parts:
-        return []
-    ids = np.concatenate([p[0] for p in parts])
-    dist = np.concatenate([p[1] for p in parts])
-    order = np.lexsort((ids, dist))[: int(take)]
-    return [(int(ids[i]), float(dist[i])) for i in order]
+    return driver_topk(
+        index,
+        int(man.get("count", 0)) * dims * 8 * 2,
+        take,
+        lambda: _probed_files(index.path, probes),
+        lambda f: _load_sq_codes(f, man["id_col"], dims),
+        lambda _f, codes: _replay_sq_distance(
+            man["metric"], codes, index._mins, index._maxs, qv
+        ),
+    )
 
 
 def create_ivfsq_index(

@@ -54,6 +54,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, DoubleType
 
+from duckdb_vss_spark.index.driver import (
+    _MAX_ISIN_CANDIDATES,
+    FileLRU,
+    _shortlist_frame,
+    driver_topk,
+)
 from duckdb_vss_spark.index.manifest import write_manifest
 from duckdb_vss_spark.functions.distance import distance_for_metric
 from duckdb_vss_spark.index.ivf import _kmeans, _norm_rows
@@ -456,32 +462,22 @@ def _adc_dist_udf(lut: np.ndarray, m: int):
 # artifact._GRAPH_CACHE): path -> (ids id-ASCENDING int64[n], codes
 # uint8[n, m]). Ascending ids make every stable selection downstream a
 # (dist, id) tie-break. ~33 MB per cached file at 1M rows, m=32.
-_CODES_CACHE: dict[tuple[str, float], tuple[np.ndarray, np.ndarray]] = {}
-_CODES_CACHE_MAX = 8
+_CODES_CACHE = FileLRU(8)
 
 
 def _load_codes(file: str, id_col: str, m: int) -> tuple[np.ndarray, np.ndarray]:
-    key = (file, os.path.getmtime(file))
-    hit = _CODES_CACHE.get(key)
-    if hit is None:
+    def read(path):
         import pyarrow.parquet as papq
 
-        for k in [k for k in _CODES_CACHE if k[0] == file]:
-            del _CODES_CACHE[k]
-        t = papq.read_table(file, columns=[id_col, "pq_code"])
+        t = papq.read_table(path, columns=[id_col, "pq_code"])
         ids = np.asarray(t[id_col].to_pylist(), dtype=np.int64)
         codes = np.frombuffer(
             b"".join(t["pq_code"].to_pylist()), dtype=np.uint8
         ).reshape(len(ids), m)
         order = np.argsort(ids, kind="stable")
-        hit = (ids[order], codes[order])
-        while len(_CODES_CACHE) >= _CODES_CACHE_MAX:
-            _CODES_CACHE.pop(next(iter(_CODES_CACHE)))
-        _CODES_CACHE[key] = hit
-    else:
-        del _CODES_CACHE[key]
-        _CODES_CACHE[key] = hit
-    return hit
+        return ids[order], codes[order]
+
+    return _CODES_CACHE.get(file, read)
 
 
 def _list_parquet_files(d: str) -> list[str]:
@@ -490,94 +486,31 @@ def _list_parquet_files(d: str) -> list[str]:
     )
 
 
-def _driver_probe_budget(spark) -> int:
-    """``spark.vss.driver_probe_max_bytes`` — the same broadcast-class
-    driver-state budget the HNSW driver probe reads (artifact.py); 0
-    disables every driver-local search path."""
-    try:
-        return int(
-            spark.conf.get("spark.vss.driver_probe_max_bytes", str(256 << 20))
-        )
-    except Exception:  # noqa: BLE001 — conf surface moved
-        return 256 << 20
-
-
-# widest shortlist the driver path materializes as literal rows — a
-# full-corpus rerank on a big artifact keeps the distributed scan
-_MAX_DRIVER_SHORTLIST = 65_536
+def _adc_scores(lut: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """``lut[np.arange(m), codes].sum(axis=1)``, the ADC pandas UDF's
+    per-row expression, gathered in slabs so peak memory stays bounded
+    (the per-row bits are slab-independent)."""
+    m = lut.shape[0]
+    return np.concatenate(
+        [
+            lut[np.arange(m), codes[lo : lo + 65_536]].sum(axis=1)
+            for lo in range(0, len(codes), 65_536)
+        ]
+    )
 
 
 def _driver_adc_shortlist(index, lut, take: int):
-    """(id, dist) ADC top-``take`` computed ON the driver (r16, guide
-    §1: the distributed candidate stage costs ~300 ms of scheduling +
-    codegen against ~1 ms of actual LUT math on a gate-small corpus —
-    the quantized twin of artifact._driver_probe_ids), or None when
-    the artifact is too big for driver state, unreadable from this
-    process, or the shortlist too wide — those keep the distributed
-    scan (the 100 TB path) bit-for-bit.
-
-    Bit-identity with the cluster path is by CONSTRUCTION, not
-    reimplementation: codes load through the same ``_load_codes`` LRU
-    the executors use, the tombstone mask is the same ``mask_dead``
-    (epoch-resolved per file), and the distance is the same
-    ``lut[np.arange(m), codes].sum(axis=1)`` expression the pandas UDF
-    runs — pinned by tests/test_quantized_driver_search."""
-    from duckdb_vss_spark.index import tombstones as _tomb
-
+    """ADC top-``take`` over every codes file, on the driver
+    (driver.driver_topk), scored by ``_adc_scores``."""
     man = index.manifest
     m = int(man["m"])
-    budget = _driver_probe_budget(index.spark)
-    est = int(man.get("count", 0)) * (m + 8) * 2
-    if budget <= 0 or est <= 0 or est > budget:
-        return None
-    if int(take) > _MAX_DRIVER_SHORTLIST:
-        return None
-    dead = _tomb.dead_mask_payload_local(index)
-    if dead is _tomb.UNREADABLE:
-        return None
-    id_col = man["id_col"]
-    try:
-        files = _list_parquet_files(os.path.join(index.path, "codes"))
-        parts = []
-        for file in files:
-            ids, codes = _load_codes(file, id_col, m)
-            if dead is not None:
-                ids, codes = _tomb.mask_dead(ids, codes, dead, file)
-            # slab the gather so peak memory stays bounded; the per-row
-            # expression (and so the result bits) is slab-independent
-            for lo in range(0, len(ids), 65_536):
-                arr = codes[lo : lo + 65_536]
-                parts.append(
-                    (ids[lo : lo + 65_536], lut[np.arange(m), arr].sum(axis=1))
-                )
-    except Exception:  # noqa: BLE001 — remote FS/corrupt: distributed path
-        return None
-    if not parts:
-        return []
-    ids = np.concatenate([p[0] for p in parts])
-    d = np.concatenate([p[1] for p in parts])
-    order = np.lexsort((ids, d))[: int(take)]
-    return [(int(ids[i]), float(d[i])) for i in order]
-
-
-def _shortlist_frame(spark, pairs, id_col: str, dist_col: str) -> DataFrame:
-    """A driver-resolved shortlist as the same two-column frame the
-    distributed candidate scan produces, rows ALREADY in that scan's
-    (dist, id) output order. Built through pandas so the plan is an
-    order-preserving LocalTableScan — collect() needs no distributed
-    job; a plain-list createDataFrame would parallelize into an RDD
-    scan costing ~0.4 s of scheduling per action (measured), which is
-    the very overhead this path removes."""
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                id_col: np.asarray([i for i, _d in pairs], dtype=np.int64),
-                dist_col: np.asarray([d for _i, d in pairs], dtype=np.float64),
-            }
-        ),
-        schema=f"{id_col} long, {dist_col} double",
+    return driver_topk(
+        index,
+        int(man.get("count", 0)) * (m + 8) * 2,
+        take,
+        lambda: _list_parquet_files(os.path.join(index.path, "codes")),
+        lambda f: _load_codes(f, man["id_col"], m),
+        lambda _f, codes: _adc_scores(lut, codes),
     )
 
 
@@ -589,8 +522,6 @@ def _fetch_candidates(source: DataFrame, cand: DataFrame, pairs, id_col: str):
     keep the join so multiplicity survives, and non-driver shortlists
     keep the r10 broadcast join unchanged."""
     if pairs is not None:
-        from duckdb_vss_spark.index.artifact import _MAX_ISIN_CANDIDATES
-
         ids = [int(i) for i, _d in pairs]
         if len(set(ids)) == len(ids) and len(ids) <= _MAX_ISIN_CANDIDATES:
             return source.where(F.col(id_col).isin(ids))
@@ -929,14 +860,11 @@ class PqIndex:
         lut = _adc_lut(q, self._books, self.metric)
         id_col = self.manifest["id_col"]
         take = int(rerank) if rerank else int(k)
-        # r16 (guide §1): gate-small artifacts resolve the ADC shortlist
-        # ON the driver with the exact cluster kernels (bit-identity
-        # pinned by tests/test_quantized_driver_search) — the candidate
-        # scan stage disappears; oversized artifacts keep the
-        # distributed scan below unchanged (the 100 TB path)
+        # gate-small artifacts resolve the shortlist on the driver
+        # (index/driver.py); None keeps the distributed scan below
         pairs = _driver_adc_shortlist(self, lut, take)
         if pairs is not None:
-            cand = _shortlist_frame(self.spark, pairs, id_col, dist_col)
+            cand = _shortlist_frame(self.spark, pairs, id_col, dist_col, "double")
         else:
             adc = _adc_dist_udf(lut, self.m)
             cand = (

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from duckdb_vss_spark.functions.distance import array_cosine_similarity
+from duckdb_vss_spark.index.driver import conf_bytes
 from duckdb_vss_spark.pipeline.text import fingerprint, word_ngrams
 
 __all__ = [
@@ -708,12 +709,7 @@ def _neardup_pairs_kernel(
     if not isinstance(df.schema[id_col].dataType, LongType):
         return None
     spark = df.sparkSession
-    try:
-        budget = int(
-            spark.conf.get("spark.vss.neardup_broadcast_max_bytes", str(64 << 20))
-        )
-    except Exception:  # noqa: BLE001 — conf surface moved
-        budget = 64 << 20
+    budget = conf_bytes(spark, "spark.vss.neardup_broadcast_max_bytes", 64 << 20)
     if budget <= 0:
         return None
     probe = (
