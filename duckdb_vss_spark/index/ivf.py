@@ -16,11 +16,11 @@ Layout on disk:
     <path>/manifest.json            metric, dims, nlist, centroids, stats
     <path>/lists/list_id=N/*.parquet   inverted list N: (id, vec)
 
-Build = one Spark job: sample → driver k-means (Lloyd, seeded) →
-broadcast centroids → vectorized pandas-UDF assignment →
-``partitionBy(list_id)`` parquet write. At 100 TB the sample stays
-driver-sized (nlist·256 rows), assignment is a map-only stage, and
-the write is the only shuffle.
+Build: sample → driver k-means (Lloyd, seeded) → one map-only
+``mapInArrow`` stage in which each task assigns its Arrow batches to
+the centroids and writes one parquet file per list (lists.py, the
+layout's one writer). At 100 TB the sample stays driver-sized
+(nlist·256 rows) and the build has no shuffle.
 """
 
 from __future__ import annotations
@@ -87,18 +87,22 @@ def _kmeans(sample: np.ndarray, nlist: int, iters: int, seed: int) -> np.ndarray
         cents.append(sample[nxt])
         d2 = np.minimum(d2, ((sample - cents[-1]) ** 2).sum(axis=1))
     c = np.stack(cents)
+    s_sq = (sample**2).sum(axis=1, keepdims=True)
     for _ in range(iters):
         # [n, nlist] distance via |a|²+|c|²-2a·c — O(n·nlist·dims) BLAS
-        dist = (
-            (sample**2).sum(axis=1, keepdims=True)
-            + (c**2).sum(axis=1)
-            - 2.0 * sample @ c.T
-        )
+        dist = s_sq + (c**2).sum(axis=1) - 2.0 * sample @ c.T
         assign = dist.argmin(axis=1)
-        for j in range(nlist):
-            members = sample[assign == j]
-            if len(members):
-                c[j] = members.mean(axis=0)
+        # members grouped by one stable sort; each mean is the sum of
+        # its contiguous (count, dims) block / count, the same reduction
+        # over the same rows in the same order as ``members.mean(0)``
+        # (np.add.reduceat sums in another order). Empty clusters keep
+        # their centroid.
+        grouped = sample[np.argsort(assign, kind="stable")]
+        lo = 0
+        for j, hi in enumerate(np.cumsum(np.bincount(assign, minlength=nlist))):
+            if hi > lo:
+                c[j] = grouped[lo:hi].sum(axis=0) / (hi - lo)
+            lo = hi
     return c
 
 
@@ -173,8 +177,8 @@ def _norm_rows(mat: np.ndarray, metric: str) -> np.ndarray:
 
 def _assign_rows(mat: np.ndarray, centroids: np.ndarray, metric: str) -> np.ndarray:
     """Nearest-centroid assignment of a float64 row matrix — the ONE
-    numpy kernel behind both the Arrow UDF and the driver-local build,
-    so list membership is bit-identical on either path."""
+    numpy kernel behind every list write, executor or driver, so list
+    membership is bit-identical on either path."""
     c = centroids.astype(np.float64)
     c_sq = (c**2).sum(axis=1)
     mat = _norm_rows(mat, metric)
@@ -182,17 +186,22 @@ def _assign_rows(mat: np.ndarray, centroids: np.ndarray, metric: str) -> np.ndar
     return dist.argmin(axis=1).astype(np.int32)
 
 
-def _assign_udf(centroids: np.ndarray, metric: str):
-    """Vectorized nearest-centroid assignment: one Arrow batch → one
-    matrix multiply (the map-only build/probe stage)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+def _assign_batch(centroids: np.ndarray, metric: str, vec_col: str, keep: list[str]):
+    """List-writer transform (lists.write_lists): the ``keep`` payload
+    columns of an Arrow batch plus the ``list_id`` of its ``vec_col``
+    rows — one matrix multiply per batch."""
+    import pyarrow as pa
 
-    def assign(v):
-        mat = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-        return pd.Series(_assign_rows(mat, centroids, metric))
+    dims = centroids.shape[1]
 
-    return pandas_udf(assign, IntegerType())
+    def assign(batch):
+        lids = _assign_rows(_arrow_matrix(batch.column(vec_col), dims), centroids, metric)
+        return pa.RecordBatch.from_arrays(
+            [batch.column(c) for c in keep] + [pa.array(lids)],
+            names=[*keep, "list_id"],
+        )
+
+    return assign
 
 
 def _fits_broadcast(queries: DataFrame, nprobe: int, budget_bytes: int) -> bool:
@@ -411,16 +420,14 @@ class IvfIndex:
         Appended ids are not deduplicated against existing lists (the
         reference's Insert appends too); deletes go through rebuild().
 
-        The per-list count update reads the JUST-WRITTEN files' parquet
-        footers (new paths = exactly what ``staged_append`` moved into
-        place) — no second pass over the batch, and the counts are
-        exactly what was written even if the batch source is
+        The per-list count update is the list writer's report of the
+        rows it wrote — no second pass over the batch, and the counts
+        are exactly what was written even if the batch source is
         non-deterministic (an unordered limit or a sample would make a
         recomputed histogram silently diverge from the written rows).
-        Falls back to recomputing the assign projection when pyarrow
-        is unavailable. Crash window: commits via staged_append —
-        after a crash inside the rename→manifest window, rebuild."""
-        from duckdb_vss_spark.index.manifest import staged_append
+        Crash window: commits via lists.append_lists — after a crash
+        inside the rename→manifest window, rebuild."""
+        from duckdb_vss_spark.index.lists import append_lists
 
         man = self.manifest
         id_col, vec_col = man["id_col"], man["vec_col"]
@@ -433,26 +440,11 @@ class IvfIndex:
                 f"IVF index keys must be of type FLOAT[{man['dimensions']}] "
                 f"(batch has FLOAT[{probe['d']}])"
             )
-        lists_dir = os.path.join(self.path, "lists")
-        assigned = src.withColumn(
-            "list_id", _assign_udf(self._centroids, self.metric)(F.col(vec_col))
+        new_files, hist = append_lists(
+            src,
+            os.path.join(self.path, "lists"),
+            _assign_batch(self._centroids, self.metric, vec_col, [id_col, vec_col]),
         )
-        new_files = staged_append(assigned, lists_dir, partition_by="list_id")
-        hist: dict[int, int] = {}
-        try:
-            import pyarrow.parquet as papq
-
-            for f in new_files:
-                part = os.path.basename(os.path.dirname(f))
-                lid = int(part.split("=", 1)[1])
-                hist[lid] = hist.get(lid, 0) + int(papq.ParquetFile(f).metadata.num_rows)
-        except Exception:  # noqa: BLE001 — pyarrow unavailable: recompute
-            hist = {
-                int(r["list_id"]): int(r["n"])
-                for r in assigned.groupBy("list_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
         bad = [lid for lid in hist if lid < 0 or lid >= man["nlist"]]
         if bad:  # pragma: no cover — assign argmins over nlist by design
             raise ValueError(f"assignment produced out-of-range list ids: {bad}")
@@ -506,17 +498,14 @@ class IvfIndex:
         list's accumulated add_batch part files into one file (the
         reference's compaction-after-DML contract,
         hnsw_index_pragmas.cpp:154-190); per-list manifest stats are
-        recounted from the rewritten files. Self-contained — lists
-        hold the full (id, vec) rows."""
+        the rewrite's per-list row counts. Self-contained — lists hold
+        the full (id, vec) rows."""
         from duckdb_vss_spark.index import tombstones as _tomb
+        from duckdb_vss_spark.index.lists import compact_lists
 
-        out = _tomb.compact_data(self, "lists", partition_by="list_id")
-        if out is None:
+        counts = compact_lists(self, "lists")
+        if counts is None:
             return self  # nothing to reclaim or coalesce (review r13)
-        counts = {
-            int(r["list_id"]): int(r["n"])
-            for r in out.groupBy("list_id").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
         lists = [
             {"list_id": int(p["list_id"]), "count": counts.get(int(p["list_id"]), 0)}
             for p in self.manifest["lists"]
@@ -568,6 +557,59 @@ class IvfIndex:
 _VECS_CACHE = FileLRU(32)
 
 
+def _fixed_width_values(col, dims: int):
+    """Flat element values of an Arrow list column whose every row
+    holds exactly ``dims`` non-NULL elements, or None for any other
+    shape (NULL rows or elements, ragged rows)."""
+    import pyarrow as pa
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    if col.null_count:
+        return None
+    flat = col.flatten()
+    if flat.null_count or len(flat) != len(col) * dims:
+        return None
+    if len(col) and not bool((np.diff(np.asarray(col.offsets)) == dims).all()):
+        return None  # uniform total length but ragged rows
+    return flat.to_numpy(zero_copy_only=False)
+
+
+def _arrow_matrix(col, dims: int | None = None) -> np.ndarray:
+    """(n, dims) float64 matrix of an Arrow list column of vectors
+    (``dims`` defaults to the first row's length). Raises ValueError on
+    NULL rows, NULL elements or rows of another length — the one
+    reader behind training samples and the list writers' kernels."""
+    import pyarrow as pa
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    if dims is None:
+        dims = int(col.value_lengths()[0].as_py() or 0) if len(col) else 0
+    vals = _fixed_width_values(col, dims)
+    if vals is None:
+        raise ValueError(
+            f"vectors must be non-NULL with {dims} non-NULL elements each"
+        )
+    return vals.astype(np.float64, copy=False).reshape(len(col), dims)
+
+
+def _sample_matrix(
+    src: DataFrame, vec_col: str, frac: float, want: int, seed: int
+) -> np.ndarray:
+    """The seeded training sample of ``src[vec_col]`` as a float64
+    matrix, read through Arrow: every row when ``frac`` >= 1, else the
+    first ``want`` rows of a seeded Bernoulli sample in partition order
+    — the rows ``sample(frac, seed).limit(want).collect()`` returns."""
+    df = src.select(vec_col)
+    if frac < 1.0:
+        df = df.sample(fraction=frac, seed=seed)
+    t = df.toArrow()
+    if frac < 1.0:
+        t = t.slice(0, want)
+    return _arrow_matrix(t.column(0))
+
+
 def _read_fixed_width(path: str, id_col: str, list_col: str, dims: int):
     """(ids, flat element values) of one inverted-list data file whose
     every ``list_col`` row holds exactly ``dims`` non-NULL elements, or
@@ -577,16 +619,10 @@ def _read_fixed_width(path: str, id_col: str, list_col: str, dims: int):
     import pyarrow.parquet as papq
 
     t = papq.read_table(path, columns=[id_col, list_col])
-    ids = np.asarray(t[id_col].to_pylist(), dtype=np.int64)
-    col = t[list_col].combine_chunks()
-    if col.null_count:
+    vals = _fixed_width_values(t[list_col], dims)
+    if vals is None:
         return None
-    flat = col.flatten()
-    if flat.null_count or len(flat) != len(ids) * dims:
-        return None
-    if len(ids) and not bool((np.diff(np.asarray(col.offsets)) == dims).all()):
-        return None  # uniform total length but ragged rows
-    return ids, flat.to_numpy(zero_copy_only=False)
+    return np.asarray(t[id_col].to_pylist(), dtype=np.int64), vals
 
 
 def _load_vecs(file: str, id_col: str, vec_col: str, dims: int):
@@ -646,8 +682,8 @@ def _replay_distance(metric: str, xv: np.ndarray, q: np.ndarray) -> np.ndarray:
 
 def _probed_files(path: str, probes) -> list[str]:
     """Data files of the probed lists under the hive
-    ``lists/list_id=N/`` layout (partitionBy writes no dir for an empty
-    list)."""
+    ``lists/list_id=N/`` layout (lists.write_lists makes no dir for an
+    empty list)."""
     from duckdb_vss_spark.index.pq import _list_parquet_files
 
     out: list[str] = []
@@ -677,45 +713,6 @@ def _driver_ivf_shortlist(index, q, probes, take: int):
     )
 
 
-def _write_lists_local(
-    rows, vec_type, id_col: str, vec_col: str,
-    centroids: np.ndarray, metric: str, lists_dir: str,
-) -> dict | None:
-    """Driver-side twin of the partitionBy(list_id) write: assign the
-    collected (id, vec) rows with the SAME numpy kernel as the Arrow
-    UDF and write one parquet file per non-empty list under the
-    hive-style ``list_id=N/`` layout Spark's reader discovers. Returns
-    {list_id: count}, or None (nothing written) when the vector element
-    type isn't one this writer preserves exactly."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    elem = getattr(getattr(vec_type, "elementType", None), "simpleString", lambda: "")()
-    pa_elem = {"float": pa.float32(), "double": pa.float64()}.get(elem)
-    if pa_elem is None:
-        return None
-    total = len(rows)
-    ids = np.fromiter((r[0] for r in rows), dtype=np.int64, count=total)
-    mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    assign = _assign_rows(mat, centroids, metric)
-    counts: dict[int, int] = {}
-    for lid in np.unique(assign):
-        sel = np.flatnonzero(assign == lid)
-        tbl = pa.table(
-            {
-                id_col: pa.array(ids[sel]),
-                vec_col: pa.array(
-                    [rows[i][1] for i in sel], type=pa.list_(pa_elem)
-                ),
-            }
-        )
-        d = os.path.join(lists_dir, f"list_id={int(lid)}")
-        os.makedirs(d)
-        pq.write_table(tbl, os.path.join(d, "part-00000.parquet"))
-        counts[int(lid)] = int(sel.size)
-    return counts
-
-
 def create_ivf_index(
     spark: SparkSession,
     df: DataFrame,
@@ -740,13 +737,14 @@ def create_ivf_index(
 
     Small FILE-BACKED sources (scan ≤ ``driver_build_max_bytes``, and
     small enough that the training sample is the whole table) build
-    in-process from ONE bounded collect: k-means, assignment (the same
-    ``_assign_rows`` kernel as the Arrow UDF — list membership is
-    bit-identical) and the hive-partitioned list write all happen on
-    the driver, skipping three Spark jobs' fixed costs (~1.5 s for a
-    half-megabyte build, r10; see create_hnsw_index's twin note)."""
+    in-process from ONE bounded Arrow collect: k-means, assignment and
+    the list write (lists.write_lists' driver form, the same
+    ``_assign_rows`` kernel as the executor form — list membership is
+    bit-identical) all happen on the driver, skipping the Spark jobs'
+    fixed costs (see create_hnsw_index's twin note)."""
     if metric not in ("l2sq", "cosine", "ip"):
         raise ValueError("IVF index 'metric' must be one of: 'cosine', 'ip', 'l2sq'")
+    from duckdb_vss_spark.index.lists import write_lists
     from duckdb_vss_spark.session import check_persistence_enabled
     from duckdb_vss_spark.sources.layout import collect_gate_bytes
 
@@ -758,13 +756,14 @@ def create_ivf_index(
     # gate on max(compressed, footer-uncompressed) size: RLE-heavy
     # columns can decompress far past their on-disk bytes (ADVICE r10)
     est = collect_gate_bytes(src, bound=driver_build_max_bytes)
-    local_rows = None
+    local = None
     if 0 <= est <= driver_build_max_bytes:
-        local_rows = src.collect()  # bounded by the gate
-        total = len(local_rows)
+        local = src.toArrow()  # bounded by the gate
+        total = local.num_rows
         if total == 0:
             raise ValueError("cannot build an IVF index over an empty vector column")
-        dims = len(local_rows[0][1])
+        local_mat = _arrow_matrix(local.column(vec_col))
+        dims = local_mat.shape[1]
     else:
         total, dims = _count_and_dims(src, vec_col, "an IVF index")
     if nlist is None:
@@ -774,20 +773,15 @@ def create_ivf_index(
     # driver-sized seeded sample for centroid training
     want = nlist * sample_per_list
     frac = min(1.0, want / total)
-    if local_rows is not None and frac >= 1.0:
+    if local is not None and frac >= 1.0:
         # the "sample" is the whole (already collected) table — the
         # exact rows the frac==1.0 branch below would re-collect
-        sample_rows = [(r[1],) for r in local_rows]
+        sample = local_mat
     else:
         # a frac<1.0 Spark sample is partitioning-dependent; keep the
         # distributed path so centroids never depend on which branch ran
-        local_rows = None
-        sample_rows = (
-            src.select(vec_col).sample(fraction=frac, seed=seed).limit(want).collect()
-            if frac < 1.0
-            else src.select(vec_col).collect()
-        )
-    sample = np.stack([np.asarray(r[0], dtype=np.float64) for r in sample_rows])
+        local = None
+        sample = _sample_matrix(src, vec_col, frac, want, seed)
     sample = _norm_rows(sample, metric)
     centroids = _kmeans(sample, nlist, kmeans_iters, seed)
     if default_nprobe is None:
@@ -802,27 +796,12 @@ def create_ivf_index(
             raise ValueError(f"index path {path!r} already exists (use overwrite=True)")
         shutil.rmtree(path)
     os.makedirs(path)
-    lists_dir = os.path.join(path, "lists")
-
-    if local_rows is not None:
-        counts = _write_lists_local(
-            local_rows, src.schema[vec_col].dataType, id_col, vec_col,
-            centroids, metric, lists_dir,
-        )
-        if counts is None:
-            local_rows = None  # unsupported element type: cluster path
-    if local_rows is None:
-        assigned = src.withColumn(
-            "list_id", _assign_udf(centroids, metric)(F.col(vec_col))
-        )
-        assigned.write.partitionBy("list_id").parquet(lists_dir)
-        counts = {
-            r["list_id"]: r["n"]
-            for r in spark.read.parquet(lists_dir)
-            .groupBy("list_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+    _, counts = write_lists(
+        local if local is not None else src,
+        os.path.join(path, "lists"),
+        path,
+        _assign_batch(centroids, metric, vec_col, [id_col, vec_col]),
+    )
     manifest = {
         "index_name": name,
         "table_name": "",

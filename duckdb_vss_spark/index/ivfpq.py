@@ -9,9 +9,9 @@ coordinates — IVFADC recall at a given m beats flat PQ's.
 
 Spark realization — the two scale levers compose mechanically:
 
-- the inverted lists are parquet partitions (``partitionBy(list_id)``,
-  exactly like index/ivf.py), so probing nprobe lists is partition
-  pruning the scan provably performs;
+- the inverted lists are parquet partitions (the ``list_id=N/`` layout
+  of index/lists.py, exactly like index/ivf.py), so probing nprobe
+  lists is partition pruning the scan provably performs;
 - each partition stores (id, m-byte residual code): the pruned scan
   reads nprobe/nlist of the ROWS at m bytes per ROW — the two
   reductions multiply;
@@ -22,9 +22,9 @@ Spark realization — the two scale levers compose mechanically:
   back to the original vectors (late materialization).
 
 Build = two driver-sized trainings (centroids, then residual
-codebooks over the same sample) + ONE map-only assign-and-encode
-Arrow stage + one partitioned write: the IVF build plan with a
-different payload column.
+codebooks over the same sample) + ONE map-only ``mapInArrow`` stage
+that assigns, encodes and writes each list's file (lists.write_lists):
+the IVF build plan with a different payload column.
 
 Metrics: l2sq and cosine (residuals taken on the unit sphere, like
 the IVF spherical quantizer). ``ip`` is rejected — inner-product
@@ -44,17 +44,18 @@ import time
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    StructField,
-    StructType,
-)
-
 from duckdb_vss_spark.index.driver import _shortlist_frame, driver_topk
 from duckdb_vss_spark.index.manifest import write_manifest
 from duckdb_vss_spark.functions.distance import distance_for_metric
-from duckdb_vss_spark.index.ivf import _calibrate_nprobe, _count_and_dims, _kmeans, _norm_rows
+from duckdb_vss_spark.index.ivf import (
+    _arrow_matrix,
+    _calibrate_nprobe,
+    _count_and_dims,
+    _kmeans,
+    _norm_rows,
+    _sample_matrix,
+)
+from duckdb_vss_spark.index.lists import append_lists, compact_lists, write_lists
 from duckdb_vss_spark.index.pq import (
     _adc_scores,
     _buffered_query_stream,
@@ -73,36 +74,48 @@ __all__ = ["create_ivfpq_index", "load_ivfpq_index", "drop_ivfpq_index", "IvfPqI
 _LOG = logging.getLogger(__name__)
 
 
-def _assign_encode_udf(centroids: np.ndarray, books: np.ndarray, metric: str):
-    """One Arrow pass: nearest-centroid assignment + residual PQ encode.
-    Returns struct(list_id int, pq_code binary)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
+def _assign_encode(
+    mat: np.ndarray, centroids: np.ndarray, books: np.ndarray, metric: str
+) -> tuple[np.ndarray, np.ndarray]:
+    """Nearest-centroid assignment + residual PQ encode of a float64
+    row matrix: (int32 list ids, (n, m) uint8 codes)."""
     c = centroids.astype(np.float64)
-    c_sq = (c**2).sum(axis=1)
-    out_t = StructType(
-        [
-            StructField("list_id", IntegerType()),
-            StructField("pq_code", BinaryType()),
-        ]
-    )
+    mat = _norm_rows(mat, metric)
+    dist = (mat**2).sum(axis=1, keepdims=True) + (c**2).sum(axis=1) - 2.0 * mat @ c.T
+    assign = dist.argmin(axis=1)
+    return assign.astype(np.int32), _encode_batch(mat - c[assign], books)
 
-    def enc(v):
-        mat = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-        mat = _norm_rows(mat, metric)
-        dist = (mat**2).sum(axis=1, keepdims=True) + c_sq - 2.0 * mat @ c.T
-        assign = dist.argmin(axis=1)
-        resid = mat - c[assign]
-        codes = _encode_batch(resid, books)
-        return pd.DataFrame(
-            {
-                "list_id": assign.astype(np.int32),
-                "pq_code": [x.tobytes() for x in codes],
-            }
+
+def _encode_lists_batch(
+    centroids: np.ndarray, books: np.ndarray, metric: str, id_col: str, vec_col: str
+):
+    """List-writer transform (lists.write_lists): an Arrow batch of
+    (id, vec) → (id, pq_code binary, list_id), one pass."""
+    import pyarrow as pa
+
+    m = books.shape[0]
+    dims = centroids.shape[1]
+
+    def enc(batch):
+        lids, codes = _assign_encode(
+            _arrow_matrix(batch.column(vec_col), dims), centroids, books, metric
+        )
+        n = len(lids)
+        pq_code = pa.Array.from_buffers(
+            pa.binary(),
+            n,
+            [
+                None,
+                pa.py_buffer(np.arange(0, (n + 1) * m, m, dtype=np.int32)),
+                pa.py_buffer(codes.tobytes()),
+            ],
+        )
+        return pa.RecordBatch.from_arrays(
+            [batch.column(id_col), pq_code, pa.array(lids)],
+            names=[id_col, "pq_code", "list_id"],
         )
 
-    return pandas_udf(enc, out_t)
+    return enc
 
 
 def _ivfadc_query_stream(
@@ -457,10 +470,9 @@ class IvfPqIndex:
         drops by the same rule as PqIndex.add_batch (a partial source
         would silently lose new-batch candidates in the re-rank join).
         Empty batch: no-op (ADVICE r12, family-consistent). Crash
-        window: commits via staged_append — after a crash inside the
-        rename→manifest window, rebuild."""
+        window: commits via lists.append_lists — after a crash inside
+        the rename→manifest window, rebuild."""
         from duckdb_vss_spark.index.ivf import _batch_count_and_dims
-        from duckdb_vss_spark.index.manifest import staged_append
         from duckdb_vss_spark.index.pq import _merge_source_fields
 
         man = self.manifest
@@ -476,24 +488,18 @@ class IvfPqIndex:
                 f"IVFPQ index keys must be of type FLOAT[{man['dimensions']}] "
                 f"(batch has FLOAT[{dims}])"
             )
-        codes_dir = os.path.join(self.path, "codes")
-        enc = _assign_encode_udf(self._centroids, self._books, self.metric)(
-            F.col(vec_col)
-        )
-        moved = staged_append(
-            src.withColumn("_e", enc).select(
-                id_col,
-                F.col("_e.list_id").alias("list_id"),
-                F.col("_e.pq_code").alias("pq_code"),
+        moved, counts = append_lists(
+            src,
+            os.path.join(self.path, "codes"),
+            _encode_lists_batch(
+                self._centroids, self._books, self.metric, id_col, vec_col
             ),
-            codes_dir,
-            partition_by="list_id",
         )
         from duckdb_vss_spark.index.manifest import record_epoch
 
         merged = dict(man)
         record_epoch(merged, moved)
-        merged["count"] = int(man["count"] + n)
+        merged["count"] = int(man["count"] + sum(counts.values()))
         merged.pop("source_fingerprint", None)
         merged.update(_merge_source_fields(man, df, "IvfPqIndex"))
         merged["updated_at"] = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
@@ -536,10 +542,10 @@ class IvfPqIndex:
         fields are untouched."""
         from duckdb_vss_spark.index import tombstones as _tomb
 
-        out = _tomb.compact_data(self, "codes", partition_by="list_id")
-        if out is None:
+        counts = compact_lists(self, "codes")
+        if counts is None:
             return self  # nothing to reclaim or coalesce (review r13)
-        _tomb.finish_compact(self, new_count=out.count())
+        _tomb.finish_compact(self, new_count=sum(counts.values()))
         return self
 
 
@@ -562,8 +568,8 @@ def create_ivfpq_index(
     overwrite: bool = False,
 ) -> IvfPqIndex:
     """Train coarse centroids + residual codebooks on one driver-sized
-    sample, then ONE map-only assign-and-encode stage and one
-    ``partitionBy(list_id)`` write."""
+    sample, then ONE map-only stage that assigns, encodes and writes
+    the lists (lists.write_lists; in-process under the driver gate)."""
     if metric not in ("l2sq", "cosine"):
         raise ValueError("IVFPQ 'metric' must be 'l2sq' or 'cosine' (no 'ip' residuals)")
     if ksub > 256:
@@ -576,20 +582,21 @@ def create_ivfpq_index(
     ).where(F.col(vec_col).isNotNull())
     # driver-local fast path (r10, see create_hnsw_index's twin note):
     # small file-backed source + whole-table training sample → ONE
-    # bounded collect serves training, assign+encode (same numpy
-    # kernels as the Arrow UDF) and the partitioned codes write
+    # bounded Arrow collect serves training and the list write's
+    # driver form (the same assign+encode kernel as the executor form)
     from duckdb_vss_spark.sources.layout import collect_gate_bytes
 
     # gate on max(compressed, footer-uncompressed) size: RLE-heavy
     # columns can decompress far past their on-disk bytes (ADVICE r10)
     est = collect_gate_bytes(src, bound=driver_build_max_bytes)
-    local_rows = None
+    local = None
     if 0 <= est <= driver_build_max_bytes:
-        local_rows = src.collect()
-        total = len(local_rows)
+        local = src.toArrow()  # bounded by the gate
+        total = local.num_rows
         if total == 0:
             raise ValueError("cannot build an IVFPQ index over an empty vector column")
-        dims = len(local_rows[0][1])
+        local_mat = _arrow_matrix(local.column(vec_col))
+        dims = local_mat.shape[1]
     else:
         total, dims = _count_and_dims(src, vec_col, "an IVFPQ index")
     if nlist is None:
@@ -598,18 +605,11 @@ def create_ivfpq_index(
 
     want = max(nlist * sample_per_list, ksub * 4)
     frac = min(1.0, want / total)
-    if local_rows is not None and frac >= 1.0:
-        sample_mat = np.stack(
-            [np.asarray(r[1], dtype=np.float64) for r in local_rows]
-        )
+    if local is not None and frac >= 1.0:
+        sample_mat = local_mat
     else:
-        local_rows = None  # partial sample is partitioning-dependent
-        rows = (
-            src.select(vec_col).sample(fraction=frac, seed=seed).limit(want).collect()
-            if frac < 1.0
-            else src.select(vec_col).collect()
-        )
-        sample_mat = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
+        local = None  # partial sample is partitioning-dependent
+        sample_mat = _sample_matrix(src, vec_col, frac, want, seed)
     sample = _norm_rows(sample_mat, metric)
     centroids = _kmeans(sample, nlist, kmeans_iters, seed)
     if default_nprobe is None:
@@ -638,44 +638,12 @@ def create_ivfpq_index(
         shutil.rmtree(path)
     os.makedirs(path)
 
-    codes_dir = os.path.join(path, "codes")
-    if local_rows is not None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq_
-
-        # sample IS the normed corpus in collected order; replicate the
-        # UDF's assign -> residual -> encode exactly
-        d = (
-            (sample**2).sum(axis=1, keepdims=True)
-            + (centroids**2).sum(axis=1)
-            - 2.0 * sample @ centroids.T
-        )
-        assign = d.argmin(axis=1).astype(np.int32)
-        codes = _encode_batch(sample - centroids[assign], books)
-        ids = np.fromiter((r[0] for r in local_rows), dtype=np.int64, count=total)
-        for lid in np.unique(assign):
-            sel = np.flatnonzero(assign == lid)
-            part = os.path.join(codes_dir, f"list_id={int(lid)}")
-            os.makedirs(part)
-            pq_.write_table(
-                pa.table(
-                    {
-                        id_col: pa.array(ids[sel]),
-                        "pq_code": pa.array(
-                            [codes[i].tobytes() for i in sel], type=pa.binary()
-                        ),
-                    }
-                ),
-                os.path.join(part, "part-00000.parquet"),
-            )
-    else:
-        enc = _assign_encode_udf(centroids, books, metric)(F.col(vec_col))
-        (
-            src.withColumn("_e", enc)
-            .select(id_col, F.col("_e.list_id").alias("list_id"), F.col("_e.pq_code").alias("pq_code"))
-            .write.partitionBy("list_id")
-            .parquet(codes_dir)
-        )
+    write_lists(
+        local if local is not None else src,
+        os.path.join(path, "codes"),
+        path,
+        _encode_lists_batch(centroids, books, metric, id_col, vec_col),
+    )
 
     manifest = {
         "index_name": name,

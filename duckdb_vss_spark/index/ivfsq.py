@@ -20,9 +20,10 @@ Layout on disk:
     <path>/lists/list_id=N/*.parquet   (id, codes array<int>) — no raw
                                        vectors; the byte win is the point
 
-Build = one Spark job: the IVF module's sampled k-means + broadcast
-assignment, one exact min/max aggregation for the SQ bounds, encode
-map-only, ``partitionBy(list_id)`` write (the only shuffle).
+Build: the IVF module's sampled k-means, one exact min/max aggregation
+for the SQ bounds, then one map-only stage — the JVM SQ encode feeding a
+``mapInArrow`` task that assigns each row to its list and writes one
+file per list (lists.write_lists). No shuffle.
 """
 
 from __future__ import annotations
@@ -44,7 +45,8 @@ from duckdb_vss_spark.index.driver import (
     _shortlist_frame,
     driver_topk,
 )
-from duckdb_vss_spark.index.ivf import _probed_files, _read_fixed_width
+from duckdb_vss_spark.index.ivf import _assign_batch, _probed_files, _read_fixed_width
+from duckdb_vss_spark.index.lists import append_lists, compact_lists, write_lists
 
 __all__ = ["IvfSqIndex", "create_ivfsq_index", "load_ivfsq_index", "drop_ivfsq_index"]
 
@@ -285,10 +287,10 @@ class IvfSqIndex:
         rebuild when the distribution shifts. Appended ids are not
         deduplicated (the reference's Insert appends too). Empty batch:
         no-op (ADVICE r12, family-consistent). Crash window: commits
-        via staged_append — after a crash inside the rename→manifest
-        window, rebuild."""
-        from duckdb_vss_spark.index.ivf import _assign_udf, _batch_count_and_dims
-        from duckdb_vss_spark.index.manifest import staged_append, write_manifest
+        via lists.append_lists — after a crash inside the
+        rename→manifest window, rebuild."""
+        from duckdb_vss_spark.index.ivf import _batch_count_and_dims
+        from duckdb_vss_spark.index.manifest import write_manifest
         from duckdb_vss_spark.index.sq import sq_encode
 
         man = self.manifest
@@ -304,20 +306,16 @@ class IvfSqIndex:
                 f"IVF-SQ index keys must be of type FLOAT[{man['dimensions']}] "
                 f"(batch has FLOAT[{dims}])"
             )
-        assign = _assign_udf(self._centroids, man["metric"])
-        encoded = sq_encode(src, vec_col, self._mins, self._maxs).withColumn(
-            "list_id", assign(F.col(vec_col))
-        )
-        moved = staged_append(
-            encoded.select(id_col, "codes", "list_id"),
+        moved, counts = append_lists(
+            sq_encode(src, vec_col, self._mins, self._maxs),
             os.path.join(self.path, "lists"),
-            partition_by="list_id",
+            _assign_batch(self._centroids, man["metric"], vec_col, [id_col, "codes"]),
         )
         from duckdb_vss_spark.index.manifest import record_epoch
 
         merged = dict(man)
         record_epoch(merged, moved)
-        merged["count"] = int(man["count"] + n)
+        merged["count"] = int(man["count"] + sum(counts.values()))
         merged["updated_at"] = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
         if manifest_extra:
             # e.g. streaming replay stamps — ride the SAME atomic commit
@@ -356,10 +354,10 @@ class IvfSqIndex:
         hold everything the shortlist scan serves from."""
         from duckdb_vss_spark.index import tombstones as _tomb
 
-        out = _tomb.compact_data(self, "lists", partition_by="list_id")
-        if out is None:
+        counts = compact_lists(self, "lists")
+        if counts is None:
             return self  # nothing to reclaim or coalesce (review r13)
-        _tomb.finish_compact(self, new_count=out.count())
+        _tomb.finish_compact(self, new_count=sum(counts.values()))
         return self
 
 
@@ -454,18 +452,22 @@ def create_ivfsq_index(
     overwrite: bool = False,
 ) -> IvfSqIndex:
     """Bulk build: sampled-k-means routing (ivf.py machinery) + exact
-    SQ bounds + map-only encode + partitioned write of (id, codes)."""
+    SQ bounds + map-only encode + one list write of (id, codes). The
+    old artifact at ``path`` is removed only once training succeeded."""
     if metric != "l2sq":
         raise ValueError("IVF-SQ v1 supports metric='l2sq' only")
-    from duckdb_vss_spark.index.ivf import _assign_udf, _calibrate_nprobe, _count_and_dims, _kmeans
+    from duckdb_vss_spark.index.ivf import (
+        _calibrate_nprobe,
+        _count_and_dims,
+        _kmeans,
+        _sample_matrix,
+    )
     from duckdb_vss_spark.index.sq import sq_encode, train_sq
     from duckdb_vss_spark.session import check_persistence_enabled
 
     check_persistence_enabled(spark)
-    if os.path.exists(path):
-        if not overwrite:
-            raise ValueError(f"index path {path!r} exists (use overwrite=True)")
-        shutil.rmtree(path)
+    if os.path.exists(path) and not overwrite:
+        raise ValueError(f"index path {path!r} exists (use overwrite=True)")
     src = df.select(
         F.col(id_col).cast("long").alias(id_col), F.col(vec_col).alias(vec_col)
     ).where(F.col(vec_col).isNotNull())
@@ -475,13 +477,7 @@ def create_ivfsq_index(
     nlist = int(min(nlist, total))
 
     want = nlist * sample_per_list
-    frac = min(1.0, want / total)
-    sample_rows = (
-        src.select(vec_col).sample(fraction=frac, seed=seed).limit(want).collect()
-        if frac < 1.0
-        else src.select(vec_col).collect()
-    )
-    sample = np.stack([np.asarray(r[0], dtype=np.float64) for r in sample_rows])
+    sample = _sample_matrix(src, vec_col, min(1.0, want / total), want, seed)
     centroids = _kmeans(sample, nlist, kmeans_iters, seed)
     if default_nprobe is None:
         default_nprobe = _calibrate_nprobe(sample, centroids, "l2sq")
@@ -491,12 +487,14 @@ def create_ivfsq_index(
         )
 
     mins, maxs = train_sq(src, vec_col)
-    assign = _assign_udf(centroids, "l2sq")
-    encoded = sq_encode(src, vec_col, mins, maxs).withColumn(
-        "list_id", assign(F.col(vec_col))
-    )
-    encoded.select(id_col, "codes", "list_id").write.partitionBy("list_id").parquet(
-        os.path.join(path, "lists")
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    os.makedirs(path)
+    write_lists(
+        sq_encode(src, vec_col, mins, maxs),
+        os.path.join(path, "lists"),
+        path,
+        _assign_batch(centroids, "l2sq", vec_col, [id_col, "codes"]),
     )
     manifest = {
         "name": name,
@@ -523,4 +521,5 @@ def load_ivfsq_index(spark: SparkSession, path: str) -> IvfSqIndex:
 
 
 def drop_ivfsq_index(path: str) -> None:
-    shutil.rmtree(path, ignore_errors=True)
+    if os.path.exists(os.path.join(path, "manifest.json")):
+        shutil.rmtree(path)

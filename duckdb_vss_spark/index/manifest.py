@@ -17,6 +17,7 @@ from contextlib import contextmanager
 __all__ = [
     "write_manifest",
     "reload_manifest",
+    "stage_dir",
     "staged_append",
     "record_epoch",
     "PendingDmlError",
@@ -126,7 +127,24 @@ def write_manifest(path: str, manifest: dict, indent: int | None = None) -> None
     os.replace(tmp, os.path.join(path, "manifest.json"))
 
 
-def staged_append(df, target_dir: str, partition_by: str | None = None) -> list[str]:
+@contextmanager
+def stage_dir(parent: str, prefix: str):
+    """A fresh hidden stage dir ``<parent>/<prefix><id>`` for one write,
+    removed on exit (a caller that renames it into place leaves nothing
+    to remove). Leftover ``<prefix>*`` dirs of crashed earlier writes
+    are swept first: they were never committed."""
+    if os.path.isdir(parent):
+        for nm in os.listdir(parent):
+            if nm.startswith(prefix):
+                shutil.rmtree(os.path.join(parent, nm), ignore_errors=True)
+    stage = os.path.join(parent, f"{prefix}{uuid.uuid4().hex[:12]}")
+    try:
+        yield stage
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
+def staged_append(df, target_dir: str) -> list[str]:
     """Append ``df``'s rows under ``target_dir`` with a NARROW commit
     window (ADVICE r12: every quantized ``add_batch`` used to
     ``mode("append")`` straight into the live data dir, so a crash
@@ -147,30 +165,17 @@ def staged_append(df, target_dir: str, partition_by: str | None = None) -> list[
     duplicates rows, and leftover ``.staging-*`` dirs are swept here on
     the next successful append.
 
-    Returns the list of files moved in (hive-partitioned layouts keep
-    their ``key=value/`` subpaths, so callers can derive per-partition
-    counts from exactly what was committed)."""
+    Flat layouts only; the inverted-list layout appends through
+    ``lists.append_lists`` with the same staging dirs. Returns the list
+    of files moved in."""
     parent = os.path.dirname(target_dir.rstrip("/")) or "."
-    # sweep orphans from previously-crashed appends of THIS artifact
-    if os.path.isdir(parent):
-        for nm in os.listdir(parent):
-            if nm.startswith(".staging-"):
-                shutil.rmtree(os.path.join(parent, nm), ignore_errors=True)
-    stage = os.path.join(parent, f".staging-{uuid.uuid4().hex[:12]}")
-    writer = df.write
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.mode("overwrite").parquet(stage)
     moved: list[str] = []
-    for root, _dirs, names in os.walk(stage):
-        rel = os.path.relpath(root, stage)
-        for nm in names:
-            if not nm.endswith(".parquet"):
-                continue
-            dest_dir = target_dir if rel == "." else os.path.join(target_dir, rel)
-            os.makedirs(dest_dir, exist_ok=True)
-            dest = os.path.join(dest_dir, nm)
-            os.replace(os.path.join(root, nm), dest)
-            moved.append(dest)
-    shutil.rmtree(stage, ignore_errors=True)
+    with stage_dir(parent, ".staging-") as stage:
+        df.write.mode("overwrite").parquet(stage)
+        os.makedirs(target_dir, exist_ok=True)
+        for nm in sorted(os.listdir(stage)):
+            if nm.endswith(".parquet"):
+                dest = os.path.join(target_dir, nm)
+                os.replace(os.path.join(stage, nm), dest)
+                moved.append(dest)
     return moved

@@ -29,8 +29,8 @@ Composition with IVF: IVF prunes *which rows* are scanned (parquet
 partition pruning, ivf.py); PQ shrinks *bytes per scanned row*. They
 multiply — at nlist=4096/nprobe=32 with m=16 codes, a 100 TB corpus
 scans (32/4096)·(16/4096) ≈ 1/32,768 of the raw bytes. The layouts
-stay orthogonal on purpose: a PQ codes file can be written
-``partitionBy(list_id)`` to get both.
+stay orthogonal on purpose: IVFADC (ivfpq.py) writes residual codes
+into the inverted-list layout (lists.py) to get both.
 
 Metric conventions follow the IVF index: l2sq trains/scores in the raw
 space; cosine trains on L2-normalized vectors (unit-sphere l2 is
@@ -62,7 +62,13 @@ from duckdb_vss_spark.index.driver import (
 )
 from duckdb_vss_spark.index.manifest import write_manifest
 from duckdb_vss_spark.functions.distance import distance_for_metric
-from duckdb_vss_spark.index.ivf import _kmeans, _norm_rows
+from duckdb_vss_spark.index.ivf import (
+    _arrow_matrix,
+    _count_and_dims,
+    _kmeans,
+    _norm_rows,
+    _sample_matrix,
+)
 
 __all__ = ["train_pq_codebooks", "create_pq_index", "load_pq_index", "drop_pq_index", "PqIndex"]
 
@@ -1000,7 +1006,6 @@ def create_pq_index(
     src = df.select(
         F.col(id_col).cast("long").alias(id_col), F.col(vec_col).alias(vec_col)
     ).where(F.col(vec_col).isNotNull())
-    from duckdb_vss_spark.index.ivf import _count_and_dims
     from duckdb_vss_spark.sources.layout import collect_gate_bytes
 
     # driver-local fast path (r10, see create_hnsw_index's twin note):
@@ -1011,29 +1016,23 @@ def create_pq_index(
     # gate on max(compressed, footer-uncompressed) size: RLE-heavy
     # columns can decompress far past their on-disk bytes (ADVICE r10)
     est = collect_gate_bytes(src, bound=driver_build_max_bytes)
-    local_rows = None
+    local = None
     if 0 <= est <= driver_build_max_bytes:
-        local_rows = src.collect()
-        total = len(local_rows)
+        local = src.toArrow()  # bounded by the gate
+        total = local.num_rows
         if total == 0:
             raise ValueError("cannot build a PQ index over an empty vector column")
-        dims = len(local_rows[0][1])
+        local_mat = _arrow_matrix(local.column(vec_col))
+        dims = local_mat.shape[1]
     else:
         total, dims = _count_and_dims(src, vec_col, "a PQ index")
 
     frac = min(1.0, sample_rows / total)
-    if local_rows is not None and frac >= 1.0:
-        sample_mat = np.stack(
-            [np.asarray(r[1], dtype=np.float64) for r in local_rows]
-        )
+    if local is not None and frac >= 1.0:
+        sample_mat = local_mat
     else:
-        local_rows = None  # partial sample is partitioning-dependent
-        rows = (
-            src.select(vec_col).sample(fraction=frac, seed=seed).limit(sample_rows).collect()
-            if frac < 1.0
-            else src.select(vec_col).collect()
-        )
-        sample_mat = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
+        local = None  # partial sample is partitioning-dependent
+        sample_mat = _sample_matrix(src, vec_col, frac, sample_rows, seed)
     sample = _norm_rows(sample_mat, metric)
     books = train_pq_codebooks(sample, m, ksub, kmeans_iters, seed)
 
@@ -1044,17 +1043,16 @@ def create_pq_index(
     os.makedirs(path)
 
     codes_dir = os.path.join(path, "codes")
-    if local_rows is not None:
+    if local is not None:
         import pyarrow as pa
         import pyarrow.parquet as pq_
 
         codes = _encode_batch(sample, books)  # sample IS the normed corpus
-        ids = np.fromiter((r[0] for r in local_rows), dtype=np.int64, count=total)
         os.makedirs(codes_dir)
         pq_.write_table(
             pa.table(
                 {
-                    id_col: pa.array(ids),
+                    id_col: local.column(id_col),
                     "pq_code": pa.array([c.tobytes() for c in codes], type=pa.binary()),
                 }
             ),

@@ -471,16 +471,18 @@ def revive(index, batch_ids_df: DataFrame, merged: dict) -> str | None:
 def compact_data(
     index,
     subdir: str,
-    partition_by: str | None = None,
     rows_per_file: int = 65_536,
-) -> DataFrame | None:
+    write_lists=None,
+):
     """Physically reclaim an artifact's data dir: read it back, drop
-    tombstoned rows, re-pack the accumulated add_batch part files
-    (right-sized for flat layouts; one file per list for hive layouts
-    so probes read one file instead of one-per-epoch), and swap the
-    rewritten dir into place. Returns the compacted rows as a
-    DataFrame over the NEW files (for per-list recounts), or None when
-    there was nothing to do (no tombstones and nothing to coalesce).
+    tombstoned rows, re-pack the accumulated add_batch part files, and
+    swap the rewritten dir into place. Flat layouts are right-sized by
+    ``rows_per_file`` and the compacted rows come back as a DataFrame
+    over the NEW files (for the recount). The inverted-list layout
+    passes ``write_lists(df, stage)`` (lists.compact_lists), which
+    writes one file per list into the stage and returns the rows per
+    list, returned here as is. None when there was nothing to do (no
+    tombstones and nothing to coalesce).
 
     The caller owns the manifest commit (count := live, tombstone
     fields cleared) — call ``finish_compact`` right after. Crash
@@ -493,6 +495,8 @@ def compact_data(
     because the manifest still references the pre-compact state) or
     the complete new data, never neither. Compaction is offline
     maintenance, same contract as the reference's PRAGMA."""
+    from duckdb_vss_spark.index.manifest import stage_dir
+
     data_dir = os.path.join(index.path, subdir)
     parked = data_dir.rstrip("/") + ".__old__"
     if not os.path.isdir(data_dir) and os.path.isdir(parked):
@@ -500,44 +504,40 @@ def compact_data(
         # renaming the stage in — the manifest was never updated, so the
         # PARKED (old) copy is the consistent state: restore it
         os.rename(parked, data_dir)
-    # sweep orphans from previously-crashed compactions of THIS artifact
-    # (the restore above runs FIRST — a stage dir is only garbage once
-    # the live data dir is accounted for)
-    for nm in os.listdir(index.path):
-        if nm.startswith(".compact-"):
-            shutil.rmtree(os.path.join(index.path, nm), ignore_errors=True)
     shutil.rmtree(parked, ignore_errors=True)  # crash after rename-in
-    # no-op guard (review r13): with zero tombstones and an already
-    # right-sized layout there is no state change to buy, so do not
-    # pay the O(corpus) rewrite or enter its crash window at all
-    if not int(index.manifest.get("deleted_count", 0)):
-        n_files = sum(
-            1
-            for _root, _dirs, names in os.walk(data_dir)
-            for nm in names
-            if nm.endswith(".parquet")
-        )
-        if partition_by:
+    # entering the stage sweeps crashed compactions of THIS artifact;
+    # that runs after the restore above — a stage dir is only garbage
+    # once the live data dir is accounted for
+    with stage_dir(index.path, ".compact-") as stage:
+        # right-sized file count: one per list, or one per rows_per_file
+        if write_lists is not None:
             floor = int(index.manifest.get("nlist", 1))
         else:
             floor = max(1, -(-live_count(index.manifest) // rows_per_file))
-        if n_files <= floor:
-            return None
-    df = index.spark.read.parquet(data_dir)
-    df = filter_dead(index, df)
-    if partition_by:
-        out = df.repartition(F.col(partition_by))
-        writer = out.write.partitionBy(partition_by)
-    else:
-        n_files = max(1, -(-live_count(index.manifest) // rows_per_file))
-        out = df.repartition(n_files)
-        writer = out.write
-    stage = os.path.join(index.path, f".compact-{uuid.uuid4().hex[:12]}")
-    writer.parquet(stage)
-    # park-then-swap (ADVICE r13): old data survives every crash point
-    os.rename(data_dir, parked)
-    os.rename(stage, data_dir)
+        # no-op guard: with zero tombstones and an already
+        # right-sized layout there is no state change to buy, so do not
+        # pay the O(corpus) rewrite or enter its crash window at all
+        if not int(index.manifest.get("deleted_count", 0)):
+            n_files = sum(
+                1
+                for _root, _dirs, names in os.walk(data_dir)
+                for nm in names
+                if nm.endswith(".parquet")
+            )
+            if n_files <= floor:
+                return None
+        df = filter_dead(index, index.spark.read.parquet(data_dir))
+        if write_lists is not None:
+            out = write_lists(df, stage)
+            os.makedirs(stage, exist_ok=True)  # no live rows: no list dir
+        else:
+            df.repartition(floor).write.parquet(stage)
+        # park-then-swap (ADVICE r13): old data survives every crash point
+        os.rename(data_dir, parked)
+        os.rename(stage, data_dir)
     shutil.rmtree(parked, ignore_errors=True)
+    if write_lists is not None:
+        return out
     return index.spark.read.parquet(data_dir)
 
 

@@ -312,3 +312,81 @@ def test_add_batch_appends_lists_and_counts(spark, emb, tmp_path):
     re = load_ivf_index(spark, path)
     assert re.manifest["count"] == nn.count()
     assert re.info().first()["count"] == nn.count()
+
+
+def _kmeans_reference(sample, nlist, iters, seed):
+    """The boolean-mask Lloyd loop ``_kmeans`` replaced, kept as the
+    exact-output reference."""
+    rng = np.random.RandomState(seed)
+    n = len(sample)
+    first = int(rng.randint(n))
+    cents = [sample[first]]
+    d2 = ((sample - cents[0]) ** 2).sum(axis=1)
+    for _ in range(1, nlist):
+        nxt = int(np.argmax(d2))
+        cents.append(sample[nxt])
+        d2 = np.minimum(d2, ((sample - cents[-1]) ** 2).sum(axis=1))
+    c = np.stack(cents)
+    for _ in range(iters):
+        dist = (
+            (sample**2).sum(axis=1, keepdims=True)
+            + (c**2).sum(axis=1)
+            - 2.0 * sample @ c.T
+        )
+        assign = dist.argmin(axis=1)
+        for j in range(nlist):
+            members = sample[assign == j]
+            if len(members):
+                c[j] = members.mean(axis=0)
+    return c
+
+
+@pytest.mark.parametrize(
+    "n, dims, k",
+    [
+        (3000, 16, 40),  # coarse-quantizer shape
+        (3000, 2, 16),  # PQ subspace
+        (800, 1, 8),  # dsub = 1: numpy sums a lone column pairwise
+        (12, 3, 9),  # k > distinct points: duplicate, then empty, centroids
+    ],
+)
+def test_kmeans_matches_reference_loop_exactly(n, dims, k):
+    from duckdb_vss_spark.index.ivf import _kmeans
+
+    rng = np.random.RandomState(n + dims)
+    x = rng.randn(n, dims)
+    if k > n // 2:
+        x = np.repeat(x[:4], n // 4, axis=0)  # 4 distinct points
+        ref = _kmeans_reference(x, k, 5, 1)
+        dist = ((x[:, None, :] - ref[None]) ** 2).sum(axis=2)
+        assert len(np.unique(dist.argmin(axis=1))) < k  # empty clusters exist
+    got = _kmeans(x, k, 5, 1)
+    assert got.tobytes() == _kmeans_reference(x, k, 5, 1).tobytes()
+
+
+def test_training_sample_through_arrow_equals_row_collect(spark):
+    """_sample_matrix reads the same rows, in the same order, as the Row
+    collect it replaced — whole table and seeded partial sample over
+    several partitions — and _arrow_matrix refuses ragged and
+    NULL-element rows."""
+    import pyarrow as pa
+
+    from duckdb_vss_spark.index.ivf import _arrow_matrix, _sample_matrix
+
+    rng = np.random.default_rng(5)
+    rows = [(i, [float(x) for x in rng.normal(size=6)]) for i in range(2000)]
+    src = spark.createDataFrame(rows, "id long, v array<float>").repartition(4)
+    whole = np.stack(
+        [np.asarray(r[0], dtype=np.float64) for r in src.select("v").collect()]
+    )
+    assert _sample_matrix(src, "v", 1.0, 2000, 7).tobytes() == whole.tobytes()
+    part = src.select("v").sample(fraction=0.3, seed=7).limit(500).collect()
+    part = np.stack([np.asarray(r[0], dtype=np.float64) for r in part])
+    got = _sample_matrix(src, "v", 0.3, 500, 7)
+    assert got.shape == (500, 6) and got.tobytes() == part.tobytes()
+    with pytest.raises(ValueError):
+        _arrow_matrix(pa.array([[1.0, 2.0], [3.0]], pa.list_(pa.float32())))
+    with pytest.raises(ValueError):
+        _arrow_matrix(pa.array([[1.0, None], [3.0, 4.0]], pa.list_(pa.float32())))
+    with pytest.raises(ValueError):
+        _arrow_matrix(pa.array([[1.0, 2.0], None], pa.list_(pa.float32())))

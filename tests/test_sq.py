@@ -204,3 +204,40 @@ def test_ivfsq_knn_join_exact_and_pruned(spark, tmp_path):
         got2.setdefault(r["qid"], []).append(r["vec_id"])
     hits = sum(len(set(got2.get(q, [])) & set(t)) for q, t in truth.items())
     assert hits / (5 * len(truth)) >= 0.6
+
+
+def test_ivfsq_overwrite_keeps_old_index_when_build_fails(spark, tmp_path):
+    """create_ivfsq_index trains before it touches ``path``: an
+    overwrite over an all-NULL source raises and the existing index is
+    still there and loadable."""
+    import pytest
+
+    from duckdb_vss_spark.index import create_ivfsq_index, load_ivfsq_index
+
+    spark.conf.set("spark.vss.enable_experimental_persistence", "true")
+    path = str(tmp_path / "ivfsq")
+    good = spark.createDataFrame(
+        [(i, [float(i), float(i % 3)]) for i in range(40)], "id long, v array<float>"
+    )
+    create_ivfsq_index(spark, good, "v", "id", path, nlist=2)
+    nulls = spark.createDataFrame([(1, None), (2, None)], "id long, v array<float>")
+    with pytest.raises(ValueError, match="empty vector column"):
+        create_ivfsq_index(spark, nulls, "v", "id", path, nlist=2, overwrite=True)
+    assert load_ivfsq_index(spark, path).count == 40
+
+
+def test_drop_ivfsq_index_requires_manifest(tmp_path):
+    """drop_ivfsq_index removes an artifact, never a directory without
+    ``manifest.json`` (the rule of every other family's drop)."""
+    from duckdb_vss_spark.index import drop_ivfsq_index
+
+    other = tmp_path / "not_an_index"
+    other.mkdir()
+    (other / "data.txt").write_text("keep")
+    drop_ivfsq_index(str(other))
+    assert (other / "data.txt").read_text() == "keep"
+    art = tmp_path / "ix"
+    art.mkdir()
+    (art / "manifest.json").write_text("{}")
+    drop_ivfsq_index(str(art))
+    assert not art.exists()
